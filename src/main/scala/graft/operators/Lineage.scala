@@ -47,10 +47,10 @@ object Lineage {
     * frame but runs no job.
     *
     * Use ONLY where the downstream per-row work measurably dominates
-    * the shuffle this adds (see the `Probe fanout` negative result for
-    * cheap-pass inputs: an exchange the pass doesn't amortize is a net
-    * loss). Row order is not preserved; callers are aggregates/joins
-    * whose results are order-independent.
+    * the shuffle this adds (see the rejected scan fan-out in
+    * OPTIMIZATION_r15.md §3 for cheap-pass inputs: an exchange the pass
+    * doesn't amortize is a net loss). Row order is not preserved;
+    * callers are aggregates/joins whose results are order-independent.
     *
     * BATCH-ONLY, PRE-EXCHANGE contract: the partition count is read
     * from the planned physical RDD (`queryExecution.toRdd` — no
@@ -90,11 +90,11 @@ object Lineage {
     * CollectMetrics node under the checkpoint, and both checkpoint
     * flavors execute through `withAction`, so the metrics arrive on the
     * listener bus as a side effect of the one job (verified on this
-    * Spark version by `Probe obscheck`). The listener bus is async —
-    * if the metrics somehow fail to arrive (a future Spark changing the
-    * checkpoint action path), fall back to computing the same
-    * aggregates from the materialized frame: one extra job, identical
-    * values, never a hang. */
+    * Spark version, OPTIMIZATION_r15.md §3; LineageSpec pins it). The
+    * listener bus is async — if the metrics somehow fail to arrive (a
+    * future Spark changing the checkpoint action path), fall back to
+    * computing the same aggregates from the materialized frame: one
+    * extra job, identical values, never a hang. */
   def truncateObserved(
       df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
     val obs = new org.apache.spark.sql.Observation
@@ -108,7 +108,6 @@ object Lineage {
     // below returns identical values from the materialized frame. The
     // timeout is short for the same reason — a bus that has not
     // delivered in 10 s is not going to.
-    val tWait = System.nanoTime()
     val got = new java.util.concurrent.CompletableFuture[Map[String, Any]]()
     val waiter = new Thread(() =>
       try got.complete(obs.get)
@@ -124,8 +123,6 @@ object Lineage {
           row.schema.fieldNames.zipWithIndex
             .map { case (n, i) => n -> row.get(i) }.toMap
       }
-    if (sys.env.contains("GRAFT_DEBUG_OBS"))
-      System.err.println(f"[truncateObserved] wait ${(System.nanoTime() - tWait) / 1e6}%.0f ms")
     (cp, m)
   }
 }

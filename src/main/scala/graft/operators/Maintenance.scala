@@ -898,6 +898,21 @@ object Maintenance {
     dir.toString
   }
 
+  /** Run independent Spark jobs from driver threads (named
+    * `<name>-<i>`) and wait for all of them: each job's straggler tail
+    * back-fills with the other jobs' tasks. The first failure is
+    * rethrown once every thread has ended, so no thread outlives the
+    * call. */
+  private[graft] def concurrently(name: String, jobs: Seq[() => Unit]): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    jobs.zipWithIndex.map { case (job, i) =>
+      val th = new Thread(() =>
+        try job() catch { case e: Throwable => errs.add(e) }, s"$name-$i")
+      th.start(); th
+    }.foreach(_.join())
+    if (!errs.isEmpty) throw errs.peek()
+  }
+
   private def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)

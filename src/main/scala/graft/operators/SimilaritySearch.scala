@@ -1059,32 +1059,23 @@ object SimilaritySearch {
     val cents = trainIvfCentroids(base, nCentroids, iters)
     def assign(v: DataFrame, src: String): DataFrame = v.select(
       col("vec_id"), nearestCellExpr(cents).as("cell"), lit(src).as("src"))
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_ivf_refresh").toString
-    val (srcDir, ckpt, segs) = (s"$work/src", s"$work/ckpt", s"$work/segs")
+    // the result is a lazy read of the segments: the work dir lives
+    // until JVM exit
+    val run = graft.streaming.StreamOps.StagedStream.lasting("graft_ivf_refresh")
+    val segs = run.path("segs")
     // segment 0: the base build (the last full re-train's output)
     assign(base, "base").write.mode("overwrite").parquet(s"$segs/seg_base")
     // the delta lands as two files → two checkpointed micro-batches
-    delta.filter(col("vec_id") % 2 === 0)
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    delta.filter(col("vec_id") % 2 =!= 0)
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val q = spark.readStream
-      .schema(vecs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // overwrite into a batchId-named segment dir: a replayed batch
-        // after checkpoint recovery rewrites the same segment instead
-        // of duplicating rows (the x_incr_agg generation idempotence)
-        assign(batch, "delta")
-          .write.mode("overwrite").parquet(s"$segs/seg_delta_$batchId")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    run.stage(Seq(
+      delta.filter(col("vec_id") % 2 === 0),
+      delta.filter(col("vec_id") % 2 =!= 0)))
+    run.drain(spark) { (batch, batchId) =>
+      // overwrite into a batchId-named segment dir: a replayed batch
+      // after checkpoint recovery rewrites the same segment instead
+      // of duplicating rows (the x_incr_agg generation idempotence)
+      assign(batch, "delta")
+        .write.mode("overwrite").parquet(s"$segs/seg_delta_$batchId")
+    }
     val segPaths = new java.io.File(segs).listFiles()
       .filter(_.isDirectory).map(_.toString).sorted.toSeq
     spark.read.parquet(segPaths: _*)

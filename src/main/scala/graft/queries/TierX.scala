@@ -126,21 +126,13 @@ object TierX {
       // (scratchDir shutdown hook), never leaked per run
       val work = Maintenance.scratchDir("graft_compact")
       // the 12 landings are independent jobs into 12 distinct dirs —
-      // submitted concurrently from driver threads (each job's
-      // straggler tail back-fills with the next job's tasks); the
-      // landed tree is byte-for-byte what the sequential loop produced
-      val landErrs =
-        new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      (0 until 12).map { b =>
-        val th = new Thread(() =>
-          try ev.filter(pmod(col("event_id"), lit(12)) === b)
-            .repartition(4)
-            .write.mode("overwrite").parquet(s"$work/batch_$b")
-          catch { case e: Throwable => landErrs.add(e) },
-          s"graft-land-$b")
-        th.start(); th
-      }.foreach(_.join())
-      if (!landErrs.isEmpty) throw landErrs.peek()
+      // submitted concurrently from driver threads; the landed tree is
+      // byte-for-byte what the sequential loop produced
+      Maintenance.concurrently("graft-land", (0 until 12).map { b => () =>
+        ev.filter(pmod(col("event_id"), lit(12)) === b)
+          .repartition(4)
+          .write.mode("overwrite").parquet(s"$work/batch_$b")
+      })
       val st = Maintenance.compactDir(s, work,
         targetBytes = 128L << 20, minFileBytes = 8L << 20)
       require(st.filesRewritten >= 48,

@@ -50,6 +50,97 @@ object StreamOps {
       df.schema)
   }
 
+  /** The bounded staged-stream runner every file-stream harness here
+    * shares. It owns one work dir:
+    *  - [[stage]] lands each slice as ONE parquet file under `src`,
+    *    with EXPLICIT ascending mtimes so the file-source admission
+    *    order (oldest mtime first) is the slice order no matter when
+    *    each write finishes. The independent slice writes are submitted
+    *    from driver threads (guide-§2.6 back-fill: each job's straggler
+    *    tail is filled by the next job's tasks) — the staging is harness
+    *    input-manufacture, but it sits inside the timed queries;
+    *  - [[drain]] streams `src` through a per-batch body at
+    *    `maxFilesPerTrigger=1` under `Trigger.AvailableNow`, so each
+    *    slice is one micro-batch and the batches arrive in slice order.
+    *
+    * Stage and drain are separate calls so a caller can stage once and
+    * time the drain alone. Each drain checkpoints into a fresh dir that
+    * is deleted when the stream ends, so repeated drains of one staged
+    * source each re-run the whole stream. Callers keep their own state
+    * beside `src` under [[path]]. */
+  private[graft] final class StagedStream(val work: String) {
+    val src: String = s"$work/src"
+
+    def path(name: String): String = s"$work/$name"
+
+    def stage(slices: Seq[DataFrame]): Unit = {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
+      val t0 = System.currentTimeMillis()
+      graft.operators.Maintenance.concurrently("graft-stage",
+        slices.zipWithIndex.map { case (df, i) => () =>
+          writeSingleFile(df, s"$src/batch_$i.parquet",
+            t0 - 60000L * (slices.size - i))
+        })
+    }
+
+    def drain(spark: SparkSession)(body: (DataFrame, Long) => Unit): Unit = {
+      val ckpt = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(work), "ckpt").toString
+      try spark.readStream
+        .schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream
+        .foreachBatch(body)
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      finally deleteWorkDir(ckpt)
+    }
+  }
+
+  private[graft] object StagedStream {
+    /** A run whose result still reads files under its work dir: the dir
+      * lives until JVM exit ([[graft.operators.Maintenance.scratchDir]]). */
+    def lasting(prefix: String): StagedStream =
+      new StagedStream(graft.operators.Maintenance.scratchDir(prefix))
+
+    /** A run whose result `f` pins before returning; the work dir is
+      * reclaimed when `f` returns or throws. */
+    def reclaimed[A](prefix: String)(f: StagedStream => A): A = {
+      val run = new StagedStream(
+        java.nio.file.Files.createTempDirectory(prefix).toString)
+      try f(run) finally deleteWorkDir(run.work)
+    }
+  }
+
+  /** Drain `run`, folding each micro-batch's `partial` into a state
+    * table by write-new-generation-then-swap: the previous generation
+    * unioned with the partial is re-aggregated by `merge` and written
+    * as a NEW generation before the pointer flips, so a reader never
+    * sees a half-merged state (at warehouse scale the flip is an atomic
+    * table pointer). Returns the final generation's path. */
+  private def foldGenerations(spark: SparkSession, run: StagedStream)(
+      partial: DataFrame => DataFrame,
+      merge: DataFrame => DataFrame): String = {
+    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
+    var gen = 0
+    run.drain(spark) { (batch, _) =>
+      val p = partial(batch)
+      val merged = Option(current.get()) match {
+        case None => p
+        case Some(prev) =>
+          merge(batch.sparkSession.read.parquet(prev).unionByName(p))
+      }
+      gen += 1
+      val next = run.path(s"state_$gen")
+      merged.write.mode("overwrite").parquet(next) // new generation…
+      current.set(next) // …then the pointer flips
+    }
+    current.get()
+  }
+
   private def fmt(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss")
 
@@ -401,31 +492,23 @@ object StreamOps {
         col("event_type"), col("value"))
     val maxTs = log.agg(max(col("ts"))).head().getTimestamp(0)
     val cut = new java.sql.Timestamp(maxTs.getTime - 2L * 3600 * 1000)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_stream_upsert").toString
-    val (src, state, ckpt) = (s"$work/src", s"$work/state", s"$work/ckpt")
+    // the result is a lazy read of the state table: the work dir lives
+    // until JVM exit
+    val run = StagedStream.lasting("graft_stream_upsert")
+    val state = run.path("state")
     val keys = Seq("user_id")
     val versions = Seq("ts", "event_id")
     val payload = Seq("event_type", "value")
     ChangeCapture.writeCdcState(
       log.filter(col("ts") <= lit(cut)), state, keys, versions, "op", payload)
     val tail = log.filter(col("ts") > lit(cut))
-    stageBatchFiles(Seq(
+    run.stage(Seq(
       tail.filter(col("event_id") % 2 === 0),
-      tail.filter(col("event_id") % 2 =!= 0)), src)
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ChangeCapture.mergeIntoState(
-          batch.sparkSession, state, batch, keys, versions, "op", payload)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      tail.filter(col("event_id") % 2 =!= 0)))
+    run.drain(spark) { (batch, _) =>
+      ChangeCapture.mergeIntoState(
+        batch.sparkSession, state, batch, keys, versions, "op", payload)
+    }
     ChangeCapture.readCurrentState(spark, state, "op")
       .select(col("user_id"), col("op"), col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
@@ -467,8 +550,8 @@ object StreamOps {
         col("value"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
     val m = ev.agg(max("event_id")).head().getLong(0)
-    val work = Maintenance.scratchDir("graft_stream_cow")
-    val (root, src, ckpt) = (s"$work/table", s"$work/src", s"$work/ckpt")
+    val run = StagedStream.lasting("graft_stream_cow")
+    val root = run.path("table")
     Maintenance.commitWithStats(spark, root,
       ev.repartitionByRange(16, col("event_id")),
       statsColumns = Seq("event_id"))
@@ -493,24 +576,13 @@ object StreamOps {
       .withColumn("value", col("value") * 3)
     // one file per batch, landed with pinned mtimes (order = batch
     // order — the last-batch-wins overlap contract depends on it)
-    stageBatchFiles(Seq(b1, b2, b3), src)
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val st = Maintenance.merge(
-          batch.sparkSession, root, batch, "event_id")
-        require(st.filesReferenced > 0 &&
-          st.filesRewritten < st.filesTotal,
-          s"per-batch COW merge must reference untouched files: $st")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    run.stage(Seq(b1, b2, b3))
+    run.drain(spark) { (batch, _) =>
+      val st = Maintenance.merge(batch.sparkSession, root, batch, "event_id")
+      require(st.filesReferenced > 0 &&
+        st.filesRewritten < st.filesTotal,
+        s"per-batch COW merge must reference untouched files: $st")
+    }
     require(Maintenance.currentGen(spark, root) == 4,
       s"three merges over the base commit must mint generations 2-4, " +
         s"got ${Maintenance.currentGen(spark, root)}")
@@ -543,50 +615,22 @@ object StreamOps {
   def incrementalAggRun(spark: SparkSession, sfDir: String): DataFrame = {
     val events = graft.Tables(spark, sfDir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_incr_agg").toString
-    val (src, ckpt) = (s"$work/src", s"$work/ckpt")
-    stageBatchFiles(Seq(
-      events.filter(col("event_id") % 2 === 0),
-      events.filter(col("event_id") % 2 =!= 0)), src)
-    val stateDir = new java.util.concurrent.atomic.AtomicReference[String](null)
-    var gen = 0
-    def partialOf(b: DataFrame): DataFrame = b
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * lit(1000000d)).cast("decimal(28,0)"))
-          .as("total_e6"))
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val partial = partialOf(batch)
-        val merged = Option(stateDir.get()) match {
-          case None => partial
-          case Some(prev) =>
-            s.read.parquet(prev).unionByName(partial)
-              .groupBy("event_type")
-              .agg(sum("n").as("n"), sum("total_e6").as("total_e6"))
-        }
-        gen += 1
-        val next = s"$work/state_$gen"
-        merged.write.mode("overwrite").parquet(next) // new generation…
-        stateDir.set(next) // …then the pointer flips
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.read.parquet(stateDir.get())
-      .select(col("event_type"), col("n"),
-        (col("total_e6").cast("double") / lit(1000000d)).as("total"))
-    // one row per event_type — pin, then reclaim the work dir (same
-    // throwaway-generation lifecycle as sketchStoreMaintainRun)
-    try pinTinyResult(out)
-    finally deleteWorkDir(work)
+    StagedStream.reclaimed("graft_incr_agg") { run =>
+      run.stage(Seq(
+        events.filter(col("event_id") % 2 === 0),
+        events.filter(col("event_id") % 2 =!= 0)))
+      val state = foldGenerations(spark, run)(
+        _.groupBy("event_type")
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * lit(1000000d)).cast("decimal(28,0)"))
+              .as("total_e6")),
+        _.groupBy("event_type")
+          .agg(sum("n").as("n"), sum("total_e6").as("total_e6")))
+      // one row per event_type — pinned before the work dir is reclaimed
+      pinTinyResult(spark.read.parquet(state)
+        .select(col("event_type"), col("n"),
+          (col("total_e6").cast("double") / lit(1000000d)).as("total")))
+    }
   }
 
   /** Streaming maintenance of the HLL sketch STORE
@@ -606,64 +650,36 @@ object StreamOps {
     val ev = graft.Tables(spark, sfDir, "events").select(
       to_date(col("ts")).as("event_date"),
       col("event_type"), col("user_id"))
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_sketch_stream").toString
-    val (src, ckpt) = (s"$work/src", s"$work/ckpt")
-    stageBatchFiles(Seq(
-      ev.filter(col("user_id") % 2 === 0),
-      ev.filter(col("user_id") % 2 =!= 0)), src)
-    val stateDir = new java.util.concurrent.atomic.AtomicReference[String](null)
-    var gen = 0
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val partial = SketchStore.buildSketches(
-          batch, Seq("event_date", "event_type"), "user_id")
-        val merged = Option(stateDir.get()) match {
-          case None => partial
-          case Some(prev) =>
-            s.read.parquet(prev).unionByName(partial)
-              .groupBy("event_date", "event_type")
-              .agg(
-                hll_union_agg(col(SketchStore.SketchCol))
-                  .as(SketchStore.SketchCol),
-                sum(SketchStore.RowCountCol).as(SketchStore.RowCountCol))
-        }
-        gen += 1
-        val next = s"$work/state_$gen"
-        merged.write.mode("overwrite").parquet(next) // new generation…
-        stateDir.set(next) // …then the pointer flips
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val store = spark.read.parquet(stateDir.get())
-    val approx = SketchStore.rollup(store, Seq("event_type"))
-      .unionByName(
-        SketchStore.rollup(store, Nil)
-          .withColumn("event_type", lit("__all__")))
-    // exact side of the shared bounded oracle (see x_sketch_rollup)
-    val exact = ev.groupBy("event_type")
-      .agg(countDistinct("user_id").as("n_users"))
-      .unionByName(
-        ev.agg(countDistinct("user_id").as("n_users"))
-          .withColumn("event_type", lit("__all__")))
-    val out = approx.join(exact, "event_type")
-      .select(
-        col("event_type"), col("n_sketches"),
-        col(SketchStore.RowCountCol).as("n_events"), col("n_users"),
-        (abs(col("approx_distinct") - col("n_users")).cast("double")
-          / col("n_users") <= 0.05).as("approx_ok"))
-    // one verdict row per event_type — pin it, then reclaim the source
-    // copies + checkpoint + state generations (repeat runs were
-    // accumulating parquet copies of the events table in the tmpdir)
-    try pinTinyResult(out)
-    finally deleteWorkDir(work)
+    StagedStream.reclaimed("graft_sketch_stream") { run =>
+      run.stage(Seq(
+        ev.filter(col("user_id") % 2 === 0),
+        ev.filter(col("user_id") % 2 =!= 0)))
+      val store = spark.read.parquet(foldGenerations(spark, run)(
+        SketchStore.buildSketches(_, Seq("event_date", "event_type"), "user_id"),
+        _.groupBy("event_date", "event_type")
+          .agg(
+            hll_union_agg(col(SketchStore.SketchCol))
+              .as(SketchStore.SketchCol),
+            sum(SketchStore.RowCountCol).as(SketchStore.RowCountCol))))
+      val approx = SketchStore.rollup(store, Seq("event_type"))
+        .unionByName(
+          SketchStore.rollup(store, Nil)
+            .withColumn("event_type", lit("__all__")))
+      // exact side of the shared bounded oracle (see x_sketch_rollup)
+      val exact = ev.groupBy("event_type")
+        .agg(countDistinct("user_id").as("n_users"))
+        .unionByName(
+          ev.agg(countDistinct("user_id").as("n_users"))
+            .withColumn("event_type", lit("__all__")))
+      // one verdict row per event_type — pinned before the source
+      // copies, checkpoint and state generations are reclaimed
+      pinTinyResult(approx.join(exact, "event_type")
+        .select(
+          col("event_type"), col("n_sketches"),
+          col(SketchStore.RowCountCol).as("n_events"), col("n_users"),
+          (abs(col("approx_distinct") - col("n_users")).cast("double")
+            / col("n_users") <= 0.05).as("approx_ok")))
+    }
   }
 
   /** Decontamination AT INGEST: each training micro-batch is checked
@@ -747,19 +763,13 @@ object StreamOps {
           .select(col("doc_id"), col("split")), "doc_id")
       .filter(col("split") === "train")
       .select(col("doc_id"), col("lang"), col("text"))
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_decontam").toString
-    val (src, bronze, ckpt) = (s"$work/src", s"$work/bronze", s"$work/ckpt")
-    // the train corpus arrives as two files → two micro-batches
-    stageBatchFiles(Seq(
-      train.filter(col("doc_id") % 2 === 0),
-      train.filter(col("doc_id") % 2 =!= 0)), src)
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StagedStream.reclaimed("graft_decontam") { run =>
+      val bronze = run.path("bronze")
+      // the train corpus arrives as two files → two micro-batches
+      run.stage(Seq(
+        train.filter(col("doc_id") % 2 === 0),
+        train.filter(col("doc_id") % 2 =!= 0)))
+      run.drain(spark) { (batch, batchId) =>
         val s = batch.sparkSession
         // no batch fanOut before the probe: measured 1.15× (A/B, r16;
         // the incrClusterStream adjudication) — micro-batch-sized
@@ -773,21 +783,16 @@ object StreamOps {
           // segment, so the landing is idempotent without a merge
           .write.mode("overwrite").parquet(s"$bronze/batch_$batchId")
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // recursive lookup over the batchId-named segments (a glob would
-    // trip FileStreamSink's noisy metadata probe on the parent)
-    val landed = spark.read
-      .option("recursiveFileLookup", "true").parquet(bronze)
-      .select(col("doc_id"), lit(true).as("landed"))
-    val out = train.select(col("doc_id"), col("lang"))
-      .join(landed, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("landed"), lit(false)).as("landed"))
-    try pinTinyResult(out)
-    finally deleteWorkDir(work)
+      // recursive lookup over the batchId-named segments (a glob would
+      // trip FileStreamSink's noisy metadata probe on the parent)
+      val landed = spark.read
+        .option("recursiveFileLookup", "true").parquet(bronze)
+        .select(col("doc_id"), lit(true).as("landed"))
+      pinTinyResult(train.select(col("doc_id"), col("lang"))
+        .join(landed, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("lang"),
+          coalesce(col("landed"), lit(false)).as("landed")))
+    }
   }
 
   /** Incremental near-dup CLUSTER maintenance — the dup-graph analog
@@ -850,54 +855,25 @@ object StreamOps {
     * (bounded by the docs-in-pairs roster) so the throwaway work dir
     * can be reclaimed. */
   private[graft] def incrClusterMaintain(
-      spark: SparkSession, docs: DataFrame, nBatches: Int): DataFrame = {
-    val src = java.nio.file.Files
-      .createTempDirectory("graft_incrcc_src").toString
-    incrClusterStage(docs, src, nBatches)
-    try incrClusterStream(spark, src)
-    finally deleteWorkDir(src)
-  }
-
-  /** Stage each slice as ONE file under `src`, with EXPLICIT ascending
-    * mtimes so the file-source admission order (oldest mtime first,
-    * `maxFilesPerTrigger=1`) is the slice order no matter when each
-    * write finishes. The independent slice writes are submitted from
-    * driver threads (guide-§2.6 back-fill: each job's straggler tail
-    * is filled by the next job's tasks) instead of sequentially — the
-    * staging is harness input-manufacture, but it sits inside the
-    * timed queries, so its wall-clock is worth the three lines. */
-  private def stageBatchFiles(slices: Seq[DataFrame], src: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    val t0 = System.currentTimeMillis()
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = slices.zipWithIndex.map { case (df, i) =>
-      val th = new Thread(() =>
-        try writeSingleFile(df, s"$src/batch_$i.parquet",
-          t0 - 60000L * (slices.size - i))
-        catch { case e: Throwable => errs.add(e) },
-        s"graft-stage-$i")
-      th.start(); th
+      spark: SparkSession, docs: DataFrame, nBatches: Int): DataFrame =
+    StagedStream.reclaimed("graft_incrcc") { run =>
+      incrClusterStage(docs, run, nBatches)
+      incrClusterStream(spark, run)
     }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
-  }
 
-  /** Stage `docs` as `nBatches` crawl-batch files under `src` (one
-    * file per batch → one micro-batch per trigger). Split out from
-    * the stream so the scale rehearsal can stage once and time the
-    * maintenance loop alone — the staging is test-input manufacture,
-    * not the operator. */
+  /** Stage `docs` as `nBatches` crawl-batch files (one file per batch →
+    * one micro-batch per trigger). Split out from the stream so the
+    * scale rehearsal can stage once and time the maintenance loop
+    * alone — the staging is test-input manufacture, not the operator. */
   private[graft] def incrClusterStage(
-      docs: DataFrame, src: String, nBatches: Int): Unit =
-    stageBatchFiles(
-      (0 until nBatches).map(r =>
-        docs.filter(col("doc_id") % nBatches === r)),
-      src)
+      docs: DataFrame, run: StagedStream, nBatches: Int): Unit =
+    run.stage((0 until nBatches).map(r =>
+      docs.filter(col("doc_id") % nBatches === r)))
 
-  /** The maintenance loop alone, over a pre-staged `src` batch dir
-    * (see [[incrClusterStage]]); state and checkpoint live in a fresh
-    * throwaway dir per call, so repeated calls over the same staged
-    * source re-run the full loop.
+  /** The maintenance loop alone, over a pre-staged run (see
+    * [[incrClusterStage]]); each call drains under a fresh checkpoint,
+    * so repeated calls over the same staged source re-run the full
+    * loop.
     *
     * State is STREAM-CARRIED between micro-batches: the label
     * generation and the per-batch index segments live as
@@ -914,12 +890,9 @@ object StreamOps {
     * 1-task write of a corpus-sized frame at production scale; the
     * truncated frame keeps the resolver's own partitioning. */
   private[graft] def incrClusterStream(
-      spark: SparkSession, src: String): DataFrame = {
+      spark: SparkSession, run: StagedStream): DataFrame = {
     import graft.operators.Dedup
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_incrcc").toString
-    val ckpt = s"$work/ckpt"
     val labelSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("rep_id", LongType),
       StructField("cluster_size", LongType)))
@@ -927,111 +900,95 @@ object StreamOps {
     // segments, batchId-keyed, every frame lineage-truncated
     val gens = scala.collection.mutable.TreeMap[Long, DataFrame]()
     val segs = scala.collection.mutable.TreeMap[Long, (DataFrame, DataFrame)]()
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tB = System.nanoTime()
-        def lap(stage: String): Unit = System.err.println(
-          f"[incr_cluster] batch $batchId $stage: ${(System.nanoTime() - tB) / 1e9}%.1f s")
-        val s = batch.sparkSession
-        // the micro-batch's CLONED session force-disables AQE (the
-        // streaming plan can't re-plan mid-flight), but everything
-        // this body runs is ordinary batch work over the landed
-        // batch — probes, CC rounds, label joins — so re-enable it
-        // for them (the batch formulation they must match runs with
-        // it on; leaving it off was also A/B'd at 1.07× in r16)
-        s.conf.set("spark.sql.adaptive.enabled", "true")
-        def empty(schema: StructType): DataFrame = s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        // the batch is shingled and banded ONCE (eagerly truncated):
-        // these two frames serve the within-batch pairs, the index
-        // probe, AND the index segment carried below — the previous
-        // three independent derivations re-shingled the batch per use
-        // (measured at the 100× rehearsal as most of the per-batch
-        // cost); they are also the schema source for the
-        // earlier-segment union when no segment exists yet
-        // NO fanOut on the batch before shingling: measured 1.20× (A/B,
-        // r16) — the single-file micro-batch's shingle pass does not
-        // amortize the added exchange at this batch size, unlike the
-        // corpus-wide serial scans fanOut exists for
-        val shB = graft.operators.Lineage.truncate(Dedup.shingles(batch))
-        val bandsB = graft.operators.Lineage.truncate(
-          Dedup.bandsFromShingles(shB))
-        // strictly-earlier segments, already materialized: a union of
-        // truncated leaves, no parquet read and no re-listing
-        val earlierSegs = segs.rangeUntil(batchId).values.toSeq
-        def earlier(pick: ((DataFrame, DataFrame)) => DataFrame,
-            schema: StructType): DataFrame =
-          if (earlierSegs.isEmpty) empty(schema)
-          else earlierSegs.map(pick).reduce(_ unionByName _)
-        // eager truncation, NOT persist: the pair set feeds many
-        // downstream actions (endpoints, frontier, the CC loop's own
-        // checkpointed rounds), and a cache lookup that misses re-runs
-        // the probe + verify chain once per action; truncation makes
-        // every consumer read the materialized partitions. The pair
-        // count rides the SAME job as an observed aggregate: delta
-        // below is empty iff newPairs is (starEdges derives from
-        // newPairs via ends -> touched — zero pairs means zero
-        // endpoints means zero frontier), so this one metric replaces
-        // a per-batch delta.isEmpty action that re-ran the whole
-        // frontier join just to test emptiness
-        val (newPairs, mNP) = graft.operators.Lineage.truncateObserved(
-          Dedup.pairsWithinAndAgainstIndex(shB, bandsB,
-            earlier(_._1, shB.schema), earlier(_._2, bandsB.schema))
-            .select(col("d1"), col("d2")),
-          org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
-        val noNewPairs = mNP("n").asInstanceOf[Long] == 0L
-        lap("pairs (cross probe + within)")
-        val prior = gens.rangeUntil(batchId).lastOption
-          .map(_._2).getOrElse(empty(labelSchema))
-        // the frontier frames only exist when the batch produced pairs
-        // — on an empty batch the prior generation carries over as-is
-        // and no frontier job runs at all
-        val resolved = if (noNewPairs) prior else {
-          val ends = newPairs.select(col("d1").as("doc_id"))
-            .unionByName(newPairs.select(col("d2").as("doc_id"))).distinct()
-          // touched is referenced three times (frontier, carry-over
-          // anti-join) — tiny, truncate it too so each use is a read,
-          // not a re-join
-          val touched = graft.operators.Lineage.truncate(
-            prior.join(ends, "doc_id").select(col("rep_id")).distinct())
-          val starEdges = prior.join(touched, "rep_id")
-            .filter(col("doc_id") =!= col("rep_id"))
-            .select(col("doc_id").as("d1"), col("rep_id").as("d2"))
-          val delta = newPairs.unionByName(starEdges)
-          // truncated: the next batch reads this generation up to
-          // three times (frontier join, carry-over anti-join) and the
-          // final pin reads it once more — one materialization, in the
-          // resolver's own partitioning (no coalesce(1) bottleneck)
-          graft.operators.Lineage.truncate(
-            prior.join(touched, Seq("rep_id"), "left_anti")
-              .select("doc_id", "rep_id", "cluster_size")
-              .unionByName(Dedup.clusters(delta)
-                .select("doc_id", "rep_id", "cluster_size")))
-        }
-        lap("frontier CC resolved")
-        gens(batchId) = resolved
-        segs(batchId) = (shB, bandsB)
-        ()
+    run.drain(spark) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // the micro-batch's CLONED session force-disables AQE (the
+      // streaming plan can't re-plan mid-flight), but everything
+      // this body runs is ordinary batch work over the landed
+      // batch — probes, CC rounds, label joins — so re-enable it
+      // for them (the batch formulation they must match runs with
+      // it on; leaving it off was also A/B'd at 1.07× in r16)
+      s.conf.set("spark.sql.adaptive.enabled", "true")
+      def empty(schema: StructType): DataFrame = s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      // the batch is shingled and banded ONCE (eagerly truncated):
+      // these two frames serve the within-batch pairs, the index
+      // probe, AND the index segment carried below — the previous
+      // three independent derivations re-shingled the batch per use
+      // (measured at the 100× rehearsal as most of the per-batch
+      // cost); they are also the schema source for the
+      // earlier-segment union when no segment exists yet
+      // NO fanOut on the batch before shingling: measured 1.20× (A/B,
+      // r16) — the single-file micro-batch's shingle pass does not
+      // amortize the added exchange at this batch size, unlike the
+      // corpus-wide serial scans fanOut exists for
+      val shB = graft.operators.Lineage.truncate(Dedup.shingles(batch))
+      val bandsB = graft.operators.Lineage.truncate(
+        Dedup.bandsFromShingles(shB))
+      // strictly-earlier segments, already materialized: a union of
+      // truncated leaves, no parquet read and no re-listing
+      val earlierSegs = segs.rangeUntil(batchId).values.toSeq
+      def earlier(pick: ((DataFrame, DataFrame)) => DataFrame,
+          schema: StructType): DataFrame =
+        if (earlierSegs.isEmpty) empty(schema)
+        else earlierSegs.map(pick).reduce(_ unionByName _)
+      // eager truncation, NOT persist: the pair set feeds many
+      // downstream actions (endpoints, frontier, the CC loop's own
+      // checkpointed rounds), and a cache lookup that misses re-runs
+      // the probe + verify chain once per action; truncation makes
+      // every consumer read the materialized partitions. The pair
+      // count rides the SAME job as an observed aggregate: delta
+      // below is empty iff newPairs is (starEdges derives from
+      // newPairs via ends -> touched — zero pairs means zero
+      // endpoints means zero frontier), so this one metric replaces
+      // a per-batch delta.isEmpty action that re-ran the whole
+      // frontier join just to test emptiness
+      val (newPairs, mNP) = graft.operators.Lineage.truncateObserved(
+        Dedup.pairsWithinAndAgainstIndex(shB, bandsB,
+          earlier(_._1, shB.schema), earlier(_._2, bandsB.schema))
+          .select(col("d1"), col("d2")),
+        org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("n"))
+      val noNewPairs = mNP("n").asInstanceOf[Long] == 0L
+      val prior = gens.rangeUntil(batchId).lastOption
+        .map(_._2).getOrElse(empty(labelSchema))
+      // the frontier frames only exist when the batch produced pairs
+      // — on an empty batch the prior generation carries over as-is
+      // and no frontier job runs at all
+      val resolved = if (noNewPairs) prior else {
+        val ends = newPairs.select(col("d1").as("doc_id"))
+          .unionByName(newPairs.select(col("d2").as("doc_id"))).distinct()
+        // touched is referenced three times (frontier, carry-over
+        // anti-join) — tiny, truncate it too so each use is a read,
+        // not a re-join
+        val touched = graft.operators.Lineage.truncate(
+          prior.join(ends, "doc_id").select(col("rep_id")).distinct())
+        val starEdges = prior.join(touched, "rep_id")
+          .filter(col("doc_id") =!= col("rep_id"))
+          .select(col("doc_id").as("d1"), col("rep_id").as("d2"))
+        val delta = newPairs.unionByName(starEdges)
+        // truncated: the next batch reads this generation up to
+        // three times (frontier join, carry-over anti-join) and the
+        // final pin reads it once more — one materialization, in the
+        // resolver's own partitioning (no coalesce(1) bottleneck)
+        graft.operators.Lineage.truncate(
+          prior.join(touched, Seq("rep_id"), "left_anti")
+            .select("doc_id", "rep_id", "cluster_size")
+            .unionByName(Dedup.clusters(delta)
+              .select("doc_id", "rep_id", "cluster_size")))
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      gens(batchId) = resolved
+      segs(batchId) = (shB, bandsB)
+    }
     // pin on the CALLER's session (the carried frames live on the
     // stream's cloned session); the collect is bounded by the
     // docs-in-pairs roster, as before
     val rows = gens.lastOption.map(_._2.collect().toIndexedSeq)
       .getOrElse(IndexedSeq.empty)
-    try spark.createDataFrame(
+    spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       labelSchema)
-    finally deleteWorkDir(work)
   }
 
   /** Two-pass checkpointed ingest of the events table into a fresh
@@ -1040,8 +997,8 @@ object StreamOps {
     * checkpoint ingests only the new files. Returns the bronze path. */
   private def twoPassBronze(spark: SparkSession, sfDir: String): String = {
     val events = graft.Tables(spark, sfDir, "events")
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_ingest").toString
+    // the callers read bronze lazily: the dir lives until JVM exit
+    val work = graft.operators.Maintenance.scratchDir("graft_ingest")
     val (src, bronze, ckpt) = (s"$work/src", s"$work/bronze", s"$work/ckpt")
     events.filter(col("event_id") % 2 === 0)
       .write.mode("append").parquet(src)
@@ -1065,25 +1022,27 @@ object StreamOps {
     graft.Tables.normalizeTs(stream, "ts")
   }
 
+  /** Shuffle partitions of a [[runToMemory]] run: every stateful
+    * operator materializes one state store PER shuffle partition, and
+    * for a bounded single-microbatch run that fixed cost dominates
+    * (measured: the stream-stream join at sf0.1 runs 2.5× faster at 8
+    * partitions than 32, identical results). An unbounded production
+    * query sizes partitions to throughput instead — this is the
+    * bounded-harness setting. */
+  private val MemoryRunPartitions = 8
+
   /** Run a bounded streaming query to a fresh memory sink and hand back
     * the sink table. Fixed per-name table: repeat calls replace it.
-    *
-    * Shuffle partitions are scoped down for the run (and restored
-    * after): every stateful operator materializes one state store PER
-    * shuffle partition, and for a bounded single-microbatch run that
-    * fixed cost dominates (measured: the stream-stream join at
-    * sf0.1 runs 2.5× faster at 8 partitions than 32, identical
-    * results). An unbounded production query sizes partitions to
-    * throughput instead — this knob is the bounded-harness setting. */
+    * Shuffle partitions are scoped to [[MemoryRunPartitions]] for the
+    * run and restored after. */
   private def runToMemory(
       spark: SparkSession,
       name: String,
       out: DataFrame,
-      outputMode: String,
-      partitions: Int = 8): DataFrame = {
+      outputMode: String): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, partitions.toString)
+    spark.conf.set(key, MemoryRunPartitions.toString)
     try {
       val q = out.writeStream
         .format("memory")
@@ -1314,20 +1273,18 @@ object StreamOps {
       val events = graft.Tables(spark, sfDir, "events")
         .select(col("ts"), col("event_type"))
         .persist()
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_late").toString
-      val dir = s"$work/src"
+      // staged only (the drain is the memory-sink run below); the dir
+      // is cached for the JVM's lifetime, so it lives until JVM exit
+      val run = StagedStream.lasting("graft_late")
       try {
         val maxTs = events.agg(max(col("ts"))).head().getTimestamp(0)
         val slice = col("ts") >= lit(maxTs) - expr("INTERVAL 10 HOURS") &&
           col("ts") < lit(maxTs) - expr("INTERVAL 8 HOURS")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        val t0 = System.currentTimeMillis()
-        writeSingleFile(events.filter(!slice), s"$dir/a_ontime.parquet", t0 - 60000)
-        writeSingleFile(events.limit(0), s"$dir/b_marker.parquet", t0 - 30000)
-        writeSingleFile(events.filter(slice), s"$dir/c_late.parquet", t0)
+        // on-time file, empty marker, late file — in that order
+        run.stage(Seq(
+          events.filter(!slice), events.limit(0), events.filter(slice)))
       } finally events.unpersist()
-      (dir, events.schema)
+      (run.src, events.schema)
     })
     val stream = spark.readStream
       .schema(schema)
@@ -1361,16 +1318,18 @@ object StreamOps {
       df: DataFrame, dest: String, mtimeMs: Long): Unit = {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_late_part").toString
-    df.repartition(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no part file written under $tmp"))
-    java.nio.file.Files.move(part.toPath,
-      java.nio.file.Paths.get(dest),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(dest),
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+    try {
+      df.repartition(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(dest),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.setLastModifiedTime(
+        java.nio.file.Paths.get(dest),
+        java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+    } finally deleteWorkDir(tmp) // the _SUCCESS marker and .crc files
   }
 }

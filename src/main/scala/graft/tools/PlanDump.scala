@@ -10,11 +10,21 @@ import graft.{SparkEntry, Tables}
 /** Generates PLANS.md: the formatted physical plan of each headline
   * query with a one-line scale note. Run after plan-affecting changes:
   *
-  *   sbt "runMain graft.tools.PlanDump"
+  *   sbt "runMain graft.tools.PlanDump [sfDir] [out]"
   *
   * The checked-in file is review evidence that the plans we ship are
   * the plans we intend (pruned scans, broadcasts where expected, no
   * stray cartesians), not whatever happened to pass.
+  *
+  * With three or more arguments it instead writes the plan of each
+  * named registry query to `<outDir>/<query>_<tag>.txt` — the
+  * before/after plan evidence the optimization rounds commit under
+  * `plans/rNN/`:
+  *
+  *   sbt "runMain graft.tools.PlanDump plans/r15 after q1,q2,... [sfDir]"
+  *
+  * Plans are captured at sf0.001 by default (plan SHAPE is scale-free;
+  * the bench numbers carry the timing evidence).
   */
 object PlanDump {
 
@@ -146,15 +156,37 @@ object PlanDump {
     "x_stream_decontam" ->
       "decontamination at ingest: per-micro-batch banded probe of the FROZEN eval MinHash index (parquet-staged before any train data flows) — candidates are an equi-join on (band, key) between batch signatures and stored index rows, O(batch) per batch, never a history rescan")
 
+  private val defaultSfDir = "/root/testdata/sf0.001"
+
+  private def formattedPlan(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = graft.Sessions.localBuilder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try {
+      if (args.length >= 3) dumpQueries(spark, args(0), args(1),
+        args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq,
+        args.lift(3).getOrElse(defaultSfDir))
+      else writePlansMd(spark, args.headOption.getOrElse(defaultSfDir),
+        args.lift(1).getOrElse("PLANS.md"))
+    } finally spark.stop()
+  }
 
+  private def dumpQueries(spark: SparkSession, outDir: String, tag: String,
+      names: Seq[String], sfDir: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"),
+        formattedPlan(spark, sfDir, name))
+      println(s"wrote $outDir/${name}_$tag.txt")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sections = headliners.map { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = formattedPlan(spark, sfDir, name)
       s"""## $name
          |
          |$note
@@ -174,6 +206,5 @@ object PlanDump {
     Files.writeString(Paths.get(out),
       (header +: sections).mkString("\n"))
     println(s"wrote $out")
-    spark.stop()
   }
 }

@@ -1,713 +1,310 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 
-/** Scratch timing probe for per-query optimization work — NOT part of
-  * the driver contract. Add named variants of a currently-slow query
-  * under alternate plans/confs and print per-variant wall seconds
-  * (min of `reps`), so plan decisions are made on measurement, not
-  * guesses. Variants live here until one wins; the winner moves into
-  * the query registry and the probe entry is deleted — decided
-  * experiments (scd2 frontier broadcast, session-window forms,
-  * simhash distinct placement, bootstrap lanes) are recorded in
-  * SCALING.md/BASELINE.md, not kept as dead code here. */
+/** Measurement probes for per-query optimization work — NOT part of
+  * the driver contract. Each mode prints what one kind of decision
+  * needs (per-batch streaming progress, job counts, a job trace, a
+  * host-speed canary, manifest read scaling, an executed plan), so
+  * plan decisions are made on measurement, not guesses. A one-off
+  * experiment is deleted once decided: its verdict is recorded in
+  * SCALING.md or the OPTIMIZATION logs, not kept here as dead code.
+  *
+  *   sbt "runMain graft.tools.Probe <mode> [args...]"
+  *
+  * The input scale is `SPARK_GRAFT_SF_DIR` (default sf0.1). */
 object Probe {
 
-  private def time(reps: Int)(f: () => DataFrame): Double = {
-    (0 until reps).map { _ =>
-      val t = System.nanoTime()
-      f().write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t) / 1e9
-    }.min
-  }
+  private val modes: Seq[(String, (SparkSession, String, Array[String]) => Unit)] = Seq(
+    "streamprofile" -> streamProfile,
+    "jobcount" -> jobCount,
+    "jobtrace" -> jobTrace,
+    "hostcanary" -> hostCanary,
+    "manifestscale" -> manifestScale,
+    "queryplan" -> queryPlan)
 
   def main(args: Array[String]): Unit = {
+    val run = modes.toMap.getOrElse(args.headOption.getOrElse(""), {
+      System.err.println(
+        s"usage: Probe <${modes.map(_._1).mkString("|")}> [args...]")
+      sys.exit(2)
+    })
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val which = args.headOption.getOrElse("all")
     val spark = graft.Sessions.localBuilder("32")
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, sfDir, args) finally spark.stop()
+  }
 
-    // micro-batch anatomy of a bounded streaming query: per-batch
-    // durationMs breakdown (trigger, addBatch, state commit) straight
-    // from StreamingQueryProgress — where the seconds of a
-    // state-store-bound query actually go. `Probe streamprofile
-    // x_stream_join_full` runs the named registry query twice (cold +
-    // steady) and prints every batch's progress line.
-    if (which == "streamprofile") {
-      val qname = args(1)
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit = {
-            val p = e.progress
-            println(s"[streamprofile] batch=${p.batchId} " +
-              s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-              s"stateOps=${p.stateOperators.map(s =>
-                s"rowsTotal=${s.numRowsTotal} commitMs=${s.commitTimeMs}")
-                .mkString(";")}")
-          }
-        })
-      (1 to 2).foreach { rep =>
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(qname)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        println(f"[streamprofile] rep $rep total ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop()
-      return
+  /** Micro-batch anatomy of a bounded streaming query: per-batch
+    * durationMs breakdown (trigger, addBatch, state commit) straight
+    * from StreamingQueryProgress — where the seconds of a
+    * state-store-bound query actually go. `Probe streamprofile
+    * x_stream_join_full` runs the named registry query twice (cold +
+    * steady) and prints every batch's progress line. */
+  private def streamProfile(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    val qname = args(1)
+    spark.streams.addListener(
+      new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val p = e.progress
+          println(s"[streamprofile] batch=${p.batchId} " +
+            s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
+            s"stateOps=${p.stateOperators.map(s =>
+              s"rowsTotal=${s.numRowsTotal} commitMs=${s.commitTimeMs}")
+              .mkString(";")}")
+        }
+      })
+    (1 to 2).foreach { rep =>
+      val t0 = System.nanoTime()
+      graft.SparkEntry.queries(qname)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
+      println(f"[streamprofile] rep $rep total ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
+  }
 
-    // fixed-overhead census: Spark JOB and task counts per declared
-    // query, one warm execution each. A query whose time is "many tiny
-    // jobs" (collects, per-operation metadata work, iterative loops)
-    // amplifies per-job fixed cost that plan shape can't show — the
-    // signal that found the maintenance-family metadata jobs. Usage:
-    //   Probe jobcount [substr]   (optional name filter)
-    if (which == "jobcount") {
-      val filter = args.lift(1).getOrElse("")
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobs.incrementAndGet()
-            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
-          }
-        })
-      val sel = graft.SparkEntry.queries.filter(_._1.contains(filter))
-      val rows = sel.map { case (name, fn) =>
-        // warm pass (codegen/JIT) at the same dir, untimed and uncounted
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        Thread.sleep(200) // let queued listener events drain
-        val (j0, k0) = (jobs.get, tasks.get)
-        val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-        } catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        spark.catalog.clearCache()
-        (name, if (ok) jobs.get - j0 else -1, tasks.get - k0, sec)
-      }.toSeq
-      rows.sortBy(-_._2).foreach { case (n, j, k, s) =>
-        println(f"[jobcount] $n%-28s jobs=$j%4d tasks=$k%6d sec=$s%7.2f")
-      }
-      println(f"[jobcount] TOTAL queries=${rows.size} jobs=${rows.map(_._2).sum} sec=${rows.map(_._4).sum}%.1f")
-      spark.stop()
-      return
-    }
-
-    // job-level anatomy of ONE query: every Spark job's id, duration,
-    // task count and call site, in order, for a warm execution. Shows
-    // where a high-jobcount query's jobs come from (AQE stages,
-    // checkpoints, collects, loop rounds). Usage: Probe jobtrace <query>
-    if (which == "jobtrace") {
-      val qname = args(1)
-      case class J(id: Int, t0: Long, tasks: Int, site: String)
-      val started = new java.util.concurrent.ConcurrentHashMap[Int, J]
-      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            started.put(e.jobId, J(e.jobId, e.time,
-              e.stageInfos.map(_.numTasks).sum,
-              Option(e.properties)
-                .flatMap(p => Option(p.getProperty("callSite.short")))
-                .getOrElse("?")))
-          override def onJobEnd(
-              e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val j = started.get(e.jobId)
-            if (j != null) lines.add(
-              f"[jobtrace] job=${j.id}%4d t0=${j.t0}%d ms=${e.time - j.t0}%6d " +
-                f"tasks=${j.tasks}%5d site=${j.site}")
-          }
-        })
-      val fn = graft.SparkEntry.queries(qname)
-      // warm pass
+  /** Fixed-overhead census: Spark JOB and task counts per declared
+    * query, one warm execution each. A query whose time is "many tiny
+    * jobs" (collects, per-operation metadata work, iterative loops)
+    * amplifies per-job fixed cost that plan shape can't show — the
+    * signal that found the maintenance-family metadata jobs. Usage:
+    * `Probe jobcount [substr]` (optional name filter). */
+  private def jobCount(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    val filter = args.lift(1).getOrElse("")
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet()
+          tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
+        }
+      })
+    val sel = graft.SparkEntry.queries.filter(_._1.contains(filter))
+    val rows = sel.map { case (name, fn) =>
+      // warm pass (codegen/JIT) at the same dir, untimed and uncounted
       try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () }
-      spark.catalog.clearCache(); Thread.sleep(300); lines.clear()
+      spark.catalog.clearCache()
+      Thread.sleep(200) // let queued listener events drain
+      val (j0, k0) = (jobs.get, tasks.get)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      val ok = try {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
+      } catch { case _: Throwable => false }
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      lines.forEach(l => println(l))
-      println(f"[jobtrace] $qname total $sec%.2f s, ${lines.size} jobs")
-      spark.stop()
-      return
+      Thread.sleep(200)
+      spark.catalog.clearCache()
+      (name, if (ok) jobs.get - j0 else -1, tasks.get - k0, sec)
+    }.toSeq
+    rows.sortBy(-_._2).foreach { case (n, j, k, s) =>
+      println(f"[jobcount] $n%-28s jobs=$j%4d tasks=$k%6d sec=$s%7.2f")
     }
+    println(f"[jobcount] TOTAL queries=${rows.size} jobs=${rows.map(_._2).sum} sec=${rows.map(_._4).sum}%.1f")
+  }
 
-    // API check: does Dataset.localCheckpoint()'s materialization
-    // deliver observe() metrics through the Observation listener on
-    // this Spark version? (If yes, iterative loops can fold their
-    // convergence count into the checkpoint job — 1 job/round, not 2.)
-    if (which == "obscheck") {
-      import org.apache.spark.sql.functions._
-      val df = spark.range(100).toDF("id")
-        .withColumn("label", col("id") % 10)
-        .withColumn("prev", col("id") % 7)
-      val obs = new org.apache.spark.sql.Observation
-      val t0 = System.nanoTime()
-      val cp = df.observe(obs,
-        sum(when(col("label") =!= col("prev"), 1L).otherwise(0L))
-          .as("changed")).localCheckpoint()
-      println(s"[obscheck] checkpointed ${cp.schema.fieldNames.mkString(",")}")
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val m = try Await.result(Future(obs.get), 5.seconds)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        Map("TIMEOUT" -> -1L) }
-      println(f"[obscheck] metrics=$m after ${(System.nanoTime()-t0)/1e9}%.2f s")
-      spark.stop()
-      return
-    }
-
-    // A/B: does fanning the 1-task documents scan out to the cores
-    // before the heavy row-local shingle/minhash pass pay for its
-    // exchange? (testdata files are single-row-group parquet — every
-    // scan is 1 task regardless of maxPartitionBytes)
-    if (which == "fanout") {
-      import org.apache.spark.sql.functions._
-      val d = sfDir
-      def docs = graft.Tables(spark, d, "documents")
-      val variants: Seq[(String, () => DataFrame)] = Seq(
-        "cluster_base" -> (() =>
-          graft.operators.Dedup.clusters(
-            graft.operators.Dedup.nearDupMinHash(docs, k = 3, threshold = 0.8))),
-        "cluster_fan32" -> (() =>
-          graft.operators.Dedup.clusters(
-            graft.operators.Dedup.nearDupMinHash(
-              docs.repartition(32), k = 3, threshold = 0.8))),
-        "near_base" -> (() =>
-          graft.operators.Dedup.nearDupJaccard(docs, k = 3, threshold = 0.8)),
-        "near_fan32" -> (() =>
-          graft.operators.Dedup.nearDupJaccard(
-            docs.repartition(32), k = 3, threshold = 0.8)))
-      variants.foreach { case (n, f) =>
-        // warm
-        try f().write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable => println(s"[fanout] $n FAILED: $e") }
-        spark.catalog.clearCache()
-        val t = time(3) { () =>
-          val df = f(); spark.catalog.clearCache(); df
+  /** Job-level anatomy of ONE query: every Spark job's id, duration,
+    * task count and call site, in order, for a warm execution. Shows
+    * where a high-jobcount query's jobs come from (AQE stages,
+    * checkpoints, collects, loop rounds). Usage: `Probe jobtrace
+    * <query>`. */
+  private def jobTrace(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    val qname = args(1)
+    case class J(id: Int, t0: Long, tasks: Int, site: String)
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, J]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.put(e.jobId, J(e.jobId, e.time,
+            e.stageInfos.map(_.numTasks).sum,
+            Option(e.properties)
+              .flatMap(p => Option(p.getProperty("callSite.short")))
+              .getOrElse("?")))
+        override def onJobEnd(
+            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          val j = started.get(e.jobId)
+          if (j != null) lines.add(
+            f"[jobtrace] job=${j.id}%4d t0=${j.t0}%d ms=${e.time - j.t0}%6d " +
+              f"tasks=${j.tasks}%5d site=${j.site}")
         }
-        println(f"[fanout] $n%-16s $t%.2f s")
-        spark.catalog.clearCache()
+      })
+    val fn = graft.SparkEntry.queries(qname)
+    // warm pass
+    try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    catch { case _: Throwable => () }
+    spark.catalog.clearCache(); Thread.sleep(300); lines.clear()
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    val sec = (System.nanoTime() - t0) / 1e9
+    Thread.sleep(500)
+    lines.forEach(l => println(l))
+    println(f"[jobtrace] $qname total $sec%.2f s, ${lines.size} jobs")
+  }
+
+  /** Host-speed canary: a DETERMINISTIC synthetic workload with zero
+    * testdata dependence, recorded next to every committed bench merge
+    * (`tools/merge_bench.py --canary`) so cross-round wall-clock
+    * comparisons can separate "the code got slower" from "this round's
+    * host is slower". Three numbers, each min-of-3:
+    *  - canary_st: single-thread JVM arithmetic (xxhash-style mix over
+    *    a fixed loop) — pins per-core speed, the dominant factor in
+    *    per-query steady times at this data scale;
+    *  - canary_mt: a fixed 32-slot Spark aggregate over range(200M)
+    *    (hash-partial + exchange + final) — pins the whole-machine
+    *    throughput the bench totals actually ride on;
+    *  - canary_io: the storage axis (see below).
+    * The cold/steady contracts in BASELINE.md are evaluated against the
+    * settlement host's canary (first recorded in BENCH_LOCAL_r13.json);
+    * later rounds scale the target by the measured canary ratio. */
+  private def hostCanary(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    import org.apache.spark.sql.functions._
+    def minOf3(f: () => Unit): Double =
+      (0 until 3).map { _ =>
+        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
+      }.min
+    val st = minOf3 { () =>
+      var h = 0x9E3779B97F4A7C15L
+      var i = 0L
+      while (i < 400000000L) {
+        h ^= i; h *= 0xC2B2AE3D27D4EB4FL; h ^= (h >>> 31); i += 1
       }
-      spark.stop()
-      return
+      // fold the result into a side effect the JIT cannot elide
+      if (h == 42L) println("")
     }
-
-    // plan-shape check: does the prefix join reuse the df groupBy's
-    // exchange of the exploded shingle frame?
-    if (which == "ppjoinplan") {
-      val docs = graft.Tables(spark, sfDir, "documents")
-      val out = graft.operators.Dedup.nearDupJaccard(docs, 3, 0.8)
-      val plan = out.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println(plan.linesIterator
-        .filter(l => l.contains("Exchange") || l.contains("Reused") ||
-          l.contains("InMemory") || l.contains("Window") ||
-          l.contains("Aggregate") || l.contains("Join"))
-        .mkString("\n"))
-      spark.stop()
-      return
-    }
-
-    // rep-1 warm-up attribution (round-12): the committed 100× ppjoin
-    // rep spread is [42.9, 28.0, 27.6] while ppjoin_cand's is
-    // [24.3, 23.0, 23.0] — the harness clears and repopulates the
-    // shingle cache EVERY rep, so cache population cannot explain a
-    // rep-1-only premium; the suspect is first-execution codegen/JIT
-    // of the verify-phase expressions (XxHash64SortedSet,
-    // SortedLongIntersectCount) and their join stages. Test: fire the
-    // FULL operator once on a ~1k-doc slice (compiles the same
-    // generated classes at trivial data cost), then time 3 reps of
-    // the full 100× op. Warmed rep 1 ≈ steady ⇒ codegen/JIT; warmed
-    // rep 1 still ~43 s ⇒ something data-sized (cache, shuffle files).
-    if (which == "ppjoinwarm") {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-        .select(
-          (col("doc_id") + col("replica") * lit(10000000L)).as("doc_id"),
-          when(col("replica") % 50 < 5, col("text"))
-            .otherwise(regexp_replace(col("text"), lit("(\\S+) (\\S+)"),
-              concat(lit("$1u"), col("replica"), lit(" $2"))))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .repartition(400)
-        .persist()
-      println(s"[probe] docs: ${docs.count()}")
-      // replica stride is 10M, so doc_id % 10M recovers the ORIGINAL
-      // id; < 20 keeps 20 source docs x 100 replicas = 2k rows (a
-      // % 1M < 2000 form kept 40% of the corpus — not a warm pass)
-      val tiny = docs.filter(col("doc_id") % 10000000L < 20L)
-      val tw0 = System.nanoTime()
-      graft.operators.Dedup.nearDupJaccard(tiny, 3, 0.8)
+    val mt = minOf3 { () =>
+      spark.range(0L, 200000000L, 1L, 32)
+        .selectExpr("xxhash64(id) % 1024 AS k")
+        .groupBy("k").count()
         .write.mode("overwrite").format("noop").save()
-      spark.catalog.clearCache(); docs.persist(); docs.count()
-      println(f"[probe] tiny warm pass: ${(System.nanoTime() - tw0) / 1e9}%.1f s")
-      (1 to 3).foreach { rep =>
-        val t0 = System.nanoTime()
-        graft.operators.Dedup.nearDupJaccard(docs, 3, 0.8)
-          .write.mode("overwrite").format("noop").save()
-        println(f"[probe] warmed full rep $rep: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        spark.catalog.clearCache(); docs.persist(); docs.count()
-      }
-      spark.stop()
-      return
     }
-
-    // host-speed canary (round-13): a DETERMINISTIC synthetic workload
-    // with zero testdata dependence, recorded next to every committed
-    // bench merge so cross-round wall-clock comparisons can separate
-    // "the code got slower" from "this round's host is slower". Two
-    // numbers, each min-of-3:
-    //  - canary_st: single-thread JVM arithmetic (xxhash-style mix over
-    //    a fixed loop) — pins per-core speed, the dominant factor in
-    //    per-query steady times at this data scale;
-    //  - canary_mt: a fixed 32-slot Spark aggregate over range(200M)
-    //    (hash-partial + exchange + final) — pins the whole-machine
-    //    throughput the bench totals actually ride on.
-    // The cold/steady contracts in BASELINE.md are evaluated against
-    // the settlement host's canary (first recorded in
-    // BENCH_LOCAL_r13.json); future rounds scale the target by the
-    // measured canary ratio instead of adjudicating "host drift" prose.
-    if (which == "hostcanary") {
-      import org.apache.spark.sql.functions._
-      def minOf3(f: () => Unit): Double =
-        (0 until 3).map { _ =>
-          val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-        }.min
-      val st = minOf3 { () =>
-        var h = 0x9E3779B97F4A7C15L
-        var i = 0L
-        while (i < 400000000L) {
-          h ^= i; h *= 0xC2B2AE3D27D4EB4FL; h ^= (h >>> 31); i += 1
-        }
-        // fold the result into a side effect the JIT cannot elide
-        if (h == 42L) println("")
-      }
-      val mt = minOf3 { () =>
-        spark.range(0L, 200000000L, 1L, 32)
-          .selectExpr("xxhash64(id) % 1024 AS k")
-          .groupBy("k").count()
-          .write.mode("overwrite").format("noop").save()
-      }
-      // round-14 finding: a window can read CPU-parity on st/mt yet
-      // run the suite 1.2-1.5x slow — the bench is parquet-I/O-heavy
-      // (every query scans sf0.1 tables; temp writes throughout) while
-      // both CPU legs are storage-blind. canary_io pins the storage
-      // axis: write a fixed ~60M-row two-column parquet to the OS
-      // tmpdir, drop the page cache's help by reading it back with a
-      // full-column aggregate, delete it. min-of-3 like the others.
-      val ioDir = java.nio.file.Files
-        .createTempDirectory("graft_canary_io").toString
-      val io = minOf3 { () =>
-        val d = s"$ioDir/t"
-        spark.range(0L, 60000000L, 1L, 32)
-          .selectExpr("id", "xxhash64(id) AS h")
-          .write.mode("overwrite").parquet(d)
-        spark.read.parquet(d)
-          // bit_xor cannot overflow under ANSI (a raw sum of
-          // full-range longs does) and still touches every value
-          .selectExpr("bit_xor(h) AS s", "count(1) AS n")
-          .write.mode("overwrite").format("noop").save()
-      }
-      org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(ioDir), true)
-      println(f"""{"canary_st":$st%.3f,"canary_mt":$mt%.3f,"canary_io":$io%.3f}""")
-      spark.stop()
-      return
-    }
-
-    // the commit log's own scale limit: without checkpointing, a
-    // generational table's manifest grows one parquet FILE per commit
-    // and every manifest read pays O(commits) file opens — this probe
-    // measures the real path (auto-checkpoint at 64 files) at commit
-    // 150 of a long-lived table, then measures the counterfactual's
-    // read cost a decade apart (150 vs 1500 unchecked one-row files,
-    // the extra 1350 manufactured by driver-side file copy) so the
-    // O(files) read growth is a measured slope, not an assertion.
-    if (which == "manifestscale") {
-      import graft.operators.Maintenance
-      import org.apache.spark.sql.functions._
-      val work = Maintenance.scratchDir("graft_manifestscale")
-      def now() = System.nanoTime()
-      def f(s: Double): Double = math.round(s * 1000) / 1000.0
-      // real path: 150 commits, appender auto-checkpoints
-      val root = s"$work/table"
-      val t0 = now()
-      (1 to 150).foreach { i =>
-        Maintenance.commit(spark, root,
-          spark.range(i, i + 1).select(col("id").as("k")))
-      }
-      val tCommits = (now() - t0) / 1e9
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-        spark.sparkContext.hadoopConfiguration)
-      val nFiles = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$root/_manifest"))
-        .count(st => !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-      val t1 = now()
-      val nRows = Maintenance.manifest(spark, root).collect().length
-      val tRead = (now() - t1) / 1e9
-      require(nRows == 150, s"history must survive checkpoints: $nRows")
-      // counterfactual: the same 150 appends, never checkpointed
-      val raw = s"$work/unchecked"
-      (1 to 150).foreach { i =>
-        spark.range(i, i + 1).select(col("id").as("k"))
-          .coalesce(1).write.mode("append").parquet(raw)
-      }
-      val t2 = now()
-      val nRaw = spark.read.parquet(raw).collect().length
-      val tRawRead = (now() - t2) / 1e9
-      require(nRaw == 150)
-      // a decade further: 1500 unchecked files (copies of the first
-      // data file — read cost depends on file COUNT, not content)
-      import org.apache.hadoop.fs.{FileUtil, Path => HPath}
-      val conf = spark.sparkContext.hadoopConfiguration
-      val src = fs.listStatus(new HPath(raw))
-        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      (1 to 1350).foreach { i =>
-        FileUtil.copy(fs, src, fs,
-          new HPath(raw, s"part-copy$i.snappy.parquet"), false, conf)
-      }
-      val t3 = now()
-      val nRaw10 = spark.read.parquet(raw).collect().length
-      val tRawRead10 = (now() - t3) / 1e9
-      require(nRaw10 == 1500)
-      println(
-        s"""{"probe":"manifestscale","commits":150,""" +
-        s""""manifest_files":$nFiles,"read_sec":${f(tRead)},""" +
-        s""""unchecked_files":150,"unchecked_read_sec":${f(tRawRead)},""" +
-        s""""unchecked_files_10x":1500,""" +
-        s""""unchecked_read_sec_10x":${f(tRawRead10)},""" +
-        s""""commits_sec":${f(tCommits)}}""")
-      spark.stop()
-      return
-    }
-
-    // compaction's selection contract at the 1000×-class table: a
-    // 110M-row landing where only ~9% of the BYTES (10M rows in 480
-    // sub-threshold fragments) sit under the size floor next to 480
-    // at-size files (100M rows). The selective pass must cost ~the
-    // 100× rehearsal row — it reads only the small fraction — while a
-    // deliberately mis-floored full rewrite pays the whole table; the
-    // pair is the measured proof that compaction is O(small-file
-    // bytes), never O(logical table). Ends with the fixpoint check.
-    if (which == "maint1000x") {
-      import graft.operators.Maintenance
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_maint1000x").toString + "/landing"
-      def now() = System.nanoTime()
-      def f(s: Double): Double = math.round(s * 100) / 100.0
-      val t0 = now()
-      spark.range(0L, 100000000L, 1L, 480)
+    // round-14 finding: a window can read CPU-parity on st/mt yet
+    // run the suite 1.2-1.5x slow — the bench is parquet-I/O-heavy
+    // (every query scans sf0.1 tables; temp writes throughout) while
+    // both CPU legs are storage-blind. canary_io pins the storage
+    // axis: write a fixed ~60M-row two-column parquet to the OS
+    // tmpdir, drop the page cache's help by reading it back with a
+    // full-column aggregate, delete it. min-of-3 like the others.
+    val ioDir = java.nio.file.Files
+      .createTempDirectory("graft_canary_io").toString
+    val io = minOf3 { () =>
+      val d = s"$ioDir/t"
+      spark.range(0L, 60000000L, 1L, 32)
         .selectExpr("id", "xxhash64(id) AS h")
         .write.mode("overwrite").parquet(d)
-      spark.range(100000000L, 110000000L, 1L, 480)
-        .selectExpr("id", "xxhash64(id) AS h")
-        .write.mode("append").parquet(d)
-      val tSynth = (now() - t0) / 1e9
-      val t1 = now()
-      val sel = Maintenance.compactDir(spark, d,
-        targetBytes = 256L << 20, minFileBytes = 1L << 20)
-      val tSel = (now() - t1) / 1e9
-      require(sel.filesRewritten == 480,
-        s"selective pass must rewrite exactly the 480 fragments: $sel")
-      val t2 = now()
-      val full = Maintenance.compactDir(spark, d,
-        targetBytes = 256L << 20, minFileBytes = 8L << 20)
-      val tFull = (now() - t2) / 1e9
-      val t3 = now()
-      val fix = Maintenance.compactDir(spark, d,
-        targetBytes = 256L << 20, minFileBytes = 1L << 20)
-      val tFix = (now() - t3) / 1e9
-      require(fix.filesRewritten == 0, s"fixpoint violated: $fix")
-      val n = spark.read.parquet(d).count()
-      require(n == 110000000L, s"content loss: $n rows")
-      println(
-        s"""{"probe":"maint1000x","rows":$n,"t_synth":${f(tSynth)},""" +
-        s""""sec_selective":${f(tSel)},"selective":"$sel",""" +
-        s""""sec_full_rewrite":${f(tFull)},"full":"$full",""" +
-        s""""sec_fixpoint":${f(tFix)}}""")
-      spark.stop()
-      return
-    }
-
-    // sketch-store build at 1000× (100M events): the one-rep rehearsal
-    // number (565 s at p1200 / 488 s at p400) bundles the synthesis,
-    // persist population and build — split them, and time warm reps of
-    // the build alone so the three-decade linearity claim compares
-    // like with like (the 100× rows are min-of-3 on a resident frame).
-    // Variants: the rehearsal's worst-case scatter vs an
-    // ingest-clustered build (repartition by the store grain first —
-    // the locality a real date-partitioned ingest batch has for free).
-    if (which == "sketch1000x") {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      val ev = graft.Tables(spark, sfDir, "events")
-        .select(col("ts").cast("long").as("s0"),
-          col("event_type"), col("user_id"))
-        .select(col("*"),
-          explode(sequence(lit(0L), lit(999L))).as("replica"))
-        .select(
-          to_date(from_unixtime(
-            col("s0") + col("replica") * lit(31L * 24 * 3600)))
-            .as("event_date"),
-          col("event_type"), col("user_id"))
-        .repartition(400)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val t0 = System.nanoTime()
-      println(s"[probe] synth+persist: ${ev.count()} rows, " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      (1 to 2).foreach { rep =>
-        val t = System.nanoTime()
-        graft.operators.SketchStore
-          .buildSketches(ev, Seq("event_date", "event_type"), "user_id")
-          .write.mode("overwrite").format("noop").save()
-        println(f"[probe] scattered build rep $rep: ${(System.nanoTime() - t) / 1e9}%.1f s")
-      }
-      (1 to 2).foreach { rep =>
-        val t = System.nanoTime()
-        graft.operators.SketchStore
-          .buildSketches(
-            ev.repartition(col("event_date")),
-            Seq("event_date", "event_type"), "user_id")
-          .write.mode("overwrite").format("noop").save()
-        println(f"[probe] clustered build rep $rep: ${(System.nanoTime() - t) / 1e9}%.1f s")
-      }
-      spark.stop()
-      return
-    }
-
-    // current open experiment: PPJoin stage profile at the 100x
-    // rehearsal volume (500k docs, 400 partitions) — where do the
-    // 116 s go?
-    if (which == "ppjoin100x") {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.storage.StorageLevel
-      import graft.functions.Hashing
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      // same synthesis as ScaleRehearsal.docs100x
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-        .select(
-          (col("doc_id") + col("replica") * lit(10000000L)).as("doc_id"),
-          when(col("replica") % 50 < 5, col("text"))
-            .otherwise(regexp_replace(col("text"), lit("(\\S+) (\\S+)"),
-              concat(lit("$1u"), col("replica"), lit(" $2"))))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .persist()
-      println(s"[probe] docs: ${docs.count()}")
-      val threshold = 0.8
-      def stage(name: String)(f: () => DataFrame): DataFrame = {
-        val t0 = System.nanoTime()
-        val df = f()
-        df.write.mode("overwrite").format("noop").save()
-        println(f"[probe] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        df
-      }
-      val t0 = System.nanoTime()
-      val sh = graft.operators.Dedup.shingles(docs, 3)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      println(s"[probe] shingle rows: ${sh.count()}, " +
-        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val ex = sh.select(col("doc_id"), size(col("shingles")).as("sz"),
-        explode(col("shingles")).as("s"))
-      val df0 = stage("df-aggregate") { () =>
-        ex.groupBy("s").agg(count(lit(1)).as("df"))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      println(s"[probe] distinct shingles: ${df0.count()}")
-      val wPrefix = Window.partitionBy("doc_id").orderBy("df", "s")
-      val prefixLen =
-        (col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
-          .cast("int")
-      val prefix = stage("prefix (join df + window)") { () =>
-        ex.join(df0, "s")
-          .withColumn("r", row_number().over(wPrefix))
-          .filter(col("r") <= prefixLen)
-          .select(col("doc_id"), col("s"), col("sz"), col("r"))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      println(s"[probe] prefix rows: ${prefix.count()}")
-      val eps = 1e-9
-      val alphaBound = lit(threshold / (1 + threshold)) *
-        (col("a.sz") + col("b.sz")) - lit(eps)
-      val cand = stage("candidates (self-join + acc filter)") { () =>
-        prefix.as("a").join(prefix.as("b"), "s")
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .filter(col("b.sz") >= lit(threshold) * col("a.sz") - lit(eps) &&
-            col("a.sz") >= lit(threshold) * col("b.sz") - lit(eps))
-          .filter(least(col("a.r"), col("b.r")) +
-            least(col("a.sz") - col("a.r"), col("b.sz") - col("b.r"))
-            >= alphaBound)
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-          .agg(count(lit(1)).as("c"),
-            max(col("a.r")).as("ra"), max(col("b.r")).as("rb"),
-            max(col("a.sz")).as("sz1"), max(col("b.sz")).as("sz2"))
-          .filter(col("c") +
-            least(col("sz1") - col("ra"), col("sz2") - col("rb"))
-            >= lit(threshold / (1 + threshold)) *
-              (col("sz1") + col("sz2")) - lit(eps))
-          .select("d1", "d2")
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      println(s"[probe] candidate pairs: ${cand.count()}")
-      stage("verify (2 joins + jaccard)") { () =>
-        val sa = sh.select(col("doc_id").as("d1"), col("shingles").as("sh1"))
-        val sb = sh.select(col("doc_id").as("d2"), col("shingles").as("sh2"))
-        cand.join(sa, "d1").join(sb, "d2")
-          .withColumn("inter",
-            size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-          .withColumn("jac",
-            col("inter") /
-              (size(col("sh1")) + size(col("sh2")) - col("inter")))
-          .filter(col("jac") >= threshold)
-          .select(col("d1"), col("d2"), round(col("jac"), 4).as("jac"))
-      }
-      val _ = Hashing // keep import
-      spark.stop()
-      return
-    }
-
-    // density analysis behind the 100× phash_pairs fan-out (6.84
-    // verified pairs/row): is the pair mass blocking noise or inherent
-    // to the 32-bit sketch at this corpus size? Reports the per-hamming
-    // pair histogram and the aHash value concentration (sum of
-    // C(count, 2) over distinct hash values = the irreducible
-    // hamming-0 pair count no blocking scheme can shrink).
-    if (which == "phash100x") {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-        .select(
-          (col("doc_id") + col("replica") * lit(10000000L)).as("doc_id"),
-          when(col("replica") % 50 < 5, col("text"))
-            .otherwise(regexp_replace(col("text"), lit("(\\S+) (\\S+)"),
-              concat(lit("$1u"), col("replica"), lit(" $2"))))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .repartition(400).persist()
-      docs.count()
-      val hashes = graft.operators.Multimodal.imageAHash(spark, docs).toDF()
-        .persist()
-      val nImg = hashes.count()
-      val conc = hashes.groupBy("ahash32").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("distinct_hashes"),
-          sum(expr("n * (n - 1) div 2")).as("h0_pairs"),
-          max("n").as("max_bucket"))
-        .head()
-      println(s"[probe] images=$nImg distinct_ahash=${conc.getLong(0)} " +
-        s"hamming0_pairs=${conc.getLong(1)} max_value_count=${conc.getLong(2)}")
-      val pairs = graft.operators.Dedup.hammingPairs32(
-        hashes, idCol = "doc_id", hashCol = "ahash32", maxHamming = 2)
-        .withColumn("same_family",
-          col("d1") % 10000000L === col("d2") % 10000000L)
-      pairs.groupBy("hamming", "same_family")
-        .agg(count(lit(1)).as("pairs"))
-        .orderBy("hamming", "same_family").collect()
-        .foreach(r => println(s"[probe] hamming=${r.getLong(0)} " +
-          s"same_family=${r.getBoolean(1)} pairs=${r.getLong(2)}"))
-      spark.stop()
-      return
-    }
-
-    // ngram_overlap stage anatomy at 100×: which stage carries the
-    // ~33 s — the Bloom build over the eval gram stream, the df
-    // aggregate, or the pairing join + per-pair count?
-    if (which == "ngramstages") {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-        .select(
-          (col("doc_id") + col("replica") * lit(10000000L)).as("doc_id"),
-          when(col("replica") % 50 < 5, col("text"))
-            .otherwise(regexp_replace(col("text"), lit("(\\S+) (\\S+)"),
-              concat(lit("$1u"), col("replica"), lit(" $2"))))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .repartition(400).persist()
-      docs.count()
-      val corpusA = docs.filter(col("doc_id") < 500000000L)
-      val corpusB = docs.filter(col("doc_id") >= 500000000L)
-        .select((col("doc_id") - 500000000L).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-      val stages = scala.collection.mutable.Buffer[(Int, Long, Int, String)]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = (for {a <- si.completionTime; b <- si.submissionTime}
-            yield a - b).getOrElse(-1L)
-          stages.synchronized {
-            stages += ((si.stageId, ms, si.numTasks,
-              si.name.linesIterator.next().take(70)))
-          }
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      graft.operators.Dedup.ngramOverlap(corpusA, corpusB,
-        n = 5, minShared = 3, maxDf = 20, bloomExpectedItems = 1L << 24)
+      spark.read.parquet(d)
+        // bit_xor cannot overflow under ANSI (a raw sum of
+        // full-range longs does) and still touches every value
+        .selectExpr("bit_xor(h) AS s", "count(1) AS n")
         .write.mode("overwrite").format("noop").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[probe] ngram_overlap total=$secs%.1f s")
-      stages.sortBy(-_._2).take(12).foreach { case (id, ms, nt, nm) =>
-        println(f"[probe]   stage $id%4d ${ms / 1000.0}%7.1f s tasks=$nt%4d $nm")
-      }
-      spark.stop()
-      return
     }
+    org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(ioDir), true)
+    println(f"""{"canary_st":$st%.3f,"canary_mt":$mt%.3f,"canary_io":$io%.3f}""")
+  }
 
-    // x_entity_resolve plan stability: execute the query end-to-end
-    // and print the FINAL (AQE) plan's exchange/reuse lines — run this
-    // in several fresh JVMs to see which exchanges flip to
-    // ReusedExchange between runs (the bench merge's 4-vs-6 drift).
-    // parameterized watch-list variant of entityplan: capture the
-    // EXECUTED (post-AQE) plan of any registry query in a fresh JVM —
-    // `Probe queryplan x_pipeline_prepare` — and print its node
-    // metrics + exchange/join lines for cross-JVM stability checks
-    if (which == "queryplan") {
-      val qname = args(1)
-      val qe = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.execution.QueryExecution]()
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(f: String,
-              q: org.apache.spark.sql.execution.QueryExecution,
-              d: Long): Unit = qe.set(q)
-          override def onFailure(f: String,
-              q: org.apache.spark.sql.execution.QueryExecution,
-              e: Exception): Unit = ()
-        })
-      val df = graft.SparkEntry.queries(qname)(spark, sfDir)
-      df.write.mode("overwrite").format("noop").save()
-      val deadline = System.nanoTime() + 10000000000L
-      while (qe.get() == null && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      if (qe.get() == null) {
-        println("[probe] QueryExecutionListener did not fire within 10 s")
-        spark.stop()
-        return
-      }
+  /** The commit log's own scale limit: without checkpointing, a
+    * generational table's manifest grows one parquet FILE per commit
+    * and every manifest read pays O(commits) file opens — this probe
+    * measures the real path (auto-checkpoint at 64 files) at commit
+    * 150 of a long-lived table, then measures the counterfactual's
+    * read cost a decade apart (150 vs 1500 unchecked one-row files,
+    * the extra 1350 manufactured by driver-side file copy) so the
+    * O(files) read growth is a measured slope, not an assertion. */
+  private def manifestScale(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    import graft.operators.Maintenance
+    import org.apache.spark.sql.functions._
+    val work = Maintenance.scratchDir("graft_manifestscale")
+    def now() = System.nanoTime()
+    def f(s: Double): Double = math.round(s * 1000) / 1000.0
+    // real path: 150 commits, appender auto-checkpoints
+    val root = s"$work/table"
+    val t0 = now()
+    (1 to 150).foreach { i =>
+      Maintenance.commit(spark, root,
+        spark.range(i, i + 1).select(col("id").as("k")))
+    }
+    val tCommits = (now() - t0) / 1e9
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val nFiles = fs.listStatus(
+      new org.apache.hadoop.fs.Path(s"$root/_manifest"))
+      .count(st => !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    val t1 = now()
+    val nRows = Maintenance.manifest(spark, root).collect().length
+    val tRead = (now() - t1) / 1e9
+    require(nRows == 150, s"history must survive checkpoints: $nRows")
+    // counterfactual: the same 150 appends, never checkpointed
+    val raw = s"$work/unchecked"
+    (1 to 150).foreach { i =>
+      spark.range(i, i + 1).select(col("id").as("k"))
+        .coalesce(1).write.mode("append").parquet(raw)
+    }
+    val t2 = now()
+    val nRaw = spark.read.parquet(raw).collect().length
+    val tRawRead = (now() - t2) / 1e9
+    require(nRaw == 150)
+    // a decade further: 1500 unchecked files (copies of the first
+    // data file — read cost depends on file COUNT, not content)
+    import org.apache.hadoop.fs.{FileUtil, Path => HPath}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = fs.listStatus(new HPath(raw))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    (1 to 1350).foreach { i =>
+      FileUtil.copy(fs, src, fs,
+        new HPath(raw, s"part-copy$i.snappy.parquet"), false, conf)
+    }
+    val t3 = now()
+    val nRaw10 = spark.read.parquet(raw).collect().length
+    val tRawRead10 = (now() - t3) / 1e9
+    require(nRaw10 == 1500)
+    println(
+      s"""{"probe":"manifestscale","commits":150,""" +
+      s""""manifest_files":$nFiles,"read_sec":${f(tRead)},""" +
+      s""""unchecked_files":150,"unchecked_read_sec":${f(tRawRead)},""" +
+      s""""unchecked_files_10x":1500,""" +
+      s""""unchecked_read_sec_10x":${f(tRawRead10)},""" +
+      s""""commits_sec":${f(tCommits)}}""")
+  }
+
+  /** The EXECUTED (post-AQE) plan of any registry query in a fresh JVM
+    * — `Probe queryplan x_pipeline_prepare [out]` — printing its node
+    * metrics, for cross-JVM plan-stability checks. */
+  private def queryPlan(
+      spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
+    val qname = args(1)
+    val qe = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.execution.QueryExecution]()
+    spark.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String,
+            q: org.apache.spark.sql.execution.QueryExecution,
+            d: Long): Unit = qe.set(q)
+        override def onFailure(f: String,
+            q: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      })
+    val df = graft.SparkEntry.queries(qname)(spark, sfDir)
+    df.write.mode("overwrite").format("noop").save()
+    val deadline = System.nanoTime() + 10000000000L
+    while (qe.get() == null && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    if (qe.get() == null)
+      println("[probe] QueryExecutionListener did not fire within 10 s")
+    else {
       val plan = qe.get().explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       println("[probe] metrics=" + graft.Bench.planMetrics(plan))
@@ -718,201 +315,6 @@ object Probe {
         java.nio.file.Files.writeString(java.nio.file.Paths.get(out), plan)
         println(s"[probe] plan written to $out")
       }
-      spark.stop()
-      return
     }
-
-    if (which == "entityplan") {
-      val qe = new java.util.concurrent.atomic.AtomicReference[
-        org.apache.spark.sql.execution.QueryExecution]()
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(f: String,
-              q: org.apache.spark.sql.execution.QueryExecution,
-              d: Long): Unit = qe.set(q)
-          override def onFailure(f: String,
-              q: org.apache.spark.sql.execution.QueryExecution,
-              e: Exception): Unit = ()
-        })
-      val df = graft.SparkEntry.queries("x_entity_resolve")(spark, sfDir)
-      df.write.mode("overwrite").format("noop").save()
-      // the listener bus is async — poll instead of a fixed sleep so a
-      // late-firing listener yields a clear message, not an NPE
-      val deadline = System.nanoTime() + 10000000000L
-      while (qe.get() == null && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      if (qe.get() == null) {
-        println("[probe] QueryExecutionListener did not fire within 10 s" +
-          " — no plan captured")
-        spark.stop()
-        return
-      }
-      val plan = qe.get().explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println("[probe] metrics=" + graft.Bench.planMetrics(plan))
-      plan.linesIterator
-        .filter(l => l.contains("Exchange") || l.contains("Join") ||
-          l.contains("InMemory"))
-        .foreach(l => println("[probe] " + l.trim.take(110)))
-      spark.stop()
-      return
-    }
-
-    // 64-bit sketch density at 100×: is the radius-6 pair output true
-    // duplicate mass (pairs within one source-doc replica family —
-    // the 100× perturbation only suffixes odd words, so every replica
-    // of one source doc stays pixel-statistics-near-identical) or
-    // cross-family collision noise (the 32-bit sketch's failure mode:
-    // unrelated images colliding on a low-entropy hash)? The family
-    // split is d % 10000000 (the replica stripe offset).
-    if (which == "phash64x100") {
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      val docs = graft.Tables(spark, sfDir, "documents")
-        .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-        .select(
-          (col("doc_id") + col("replica") * lit(10000000L)).as("doc_id"),
-          when(col("replica") % 50 < 5, col("text"))
-            .otherwise(regexp_replace(col("text"), lit("(\\S+) (\\S+)"),
-              concat(lit("$1u"), col("replica"), lit(" $2"))))
-            .as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .repartition(400).persist()
-      docs.count()
-      val hashes = graft.operators.Multimodal.imageAHash64(spark, docs)
-        .toDF().persist()
-      val nImg = hashes.count()
-      val conc = hashes.groupBy("ahash64").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("distinct_hashes"),
-          sum(expr("n * (n - 1) div 2")).as("h0_pairs"),
-          max("n").as("max_bucket"))
-        .head()
-      println(s"[probe] images=$nImg distinct_ahash64=${conc.getLong(0)} " +
-        s"hamming0_pairs=${conc.getLong(1)} max_value_count=${conc.getLong(2)}")
-      val pairs = graft.operators.Dedup.hammingPairs64(
-        hashes, idCol = "doc_id", hashCol = "ahash64", maxHamming = 6)
-        .withColumn("same_family",
-          col("d1") % 10000000L === col("d2") % 10000000L)
-      pairs.groupBy("hamming", "same_family")
-        .agg(count(lit(1)).as("pairs"))
-        .orderBy("hamming", "same_family").collect()
-        .foreach(r => println(s"[probe] hamming=${r.getLong(0)} " +
-          s"same_family=${r.getBoolean(1)} pairs=${r.getLong(2)}"))
-      spark.stop()
-      return
-    }
-
-    // embed_pairs layout sensitivity: the 100× rehearsal measured the
-    // LSH pairing ~65% slower on a 400-partition input than on the
-    // legacy 1-2-partition layout. Stage the op (bits projection vs
-    // band-join+verify) under both layouts in one session.
-    if (which == "embed100x") {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.storage.StorageLevel
-      spark.conf.set("spark.sql.shuffle.partitions", "400")
-      def vecs100(repart: Boolean) = {
-        val base = graft.Tables(spark, sfDir, "embeddings")
-          .select(col("*"), explode(sequence(lit(0L), lit(99L))).as("replica"))
-          .select(
-            (col("vec_id") + col("replica") * lit(10000000L)).as("vec_id"),
-            when(col("replica") % 50 < 5, col("embedding"))
-              .otherwise(expr(
-                "cast(transform(embedding, (x, i) -> " +
-                  "(pmod(xxhash64(vec_id, replica, i), 2001) - 1000) / 1000.0" +
-                  ") as array<float>)"))
-              .as("embedding"),
-            col("label"))
-        (if (repart) base.repartition(400) else base).persist()
-      }
-      // third mode: synthesized corpus staged as PARQUET (row -1),
-      // modeling the real input — a columnar table on disk. The dir is
-      // per-run scratch, deleted after the layouts loop (same policy as
-      // ScaleRehearsal's staging dir — probe runs must not accumulate
-      // multi-GB temp trees).
-      var parquetScratch: Option[java.nio.file.Path] = None
-      def vecsParquet() = {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_probe_vecs")
-        parquetScratch = Some(dir)
-        vecs100(true).write.mode("overwrite").parquet(dir.toString)
-        spark.catalog.clearCache()
-        spark.read.parquet(dir.toString)
-      }
-      (Seq(false, true).map(r => () => (r.toString, vecs100(r))) :+
-        (() => ("parquet", vecsParquet()))).foreach { mk =>
-        val (tag, vecs) = mk()
-        val n = vecs.count()
-        def t[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val a = f
-          (a, (System.nanoTime() - t0) / 1e9)
-        }
-        // stage the cosinePairsLsh internals by hand
-        val (probes, tProbe) = t {
-          vecs.orderBy("vec_id").limit(64).select("embedding")
-            .collect().map(_.getSeq[Float](0)).toSeq
-        }
-        val (_, tScan) = t {
-          vecs.agg(sum(size(col("embedding")))).head()
-        }
-        def dotsN(k: Int): Double = t {
-          vecs.agg(sum(probes.take(k).map(p =>
-            graft.functions.Similarity.dot(col("embedding"), typedlit(p)))
-            .reduce(_ + _))).head()
-        }._2
-        val (d1, d8, d64) = (dotsN(1), dotsN(8), dotsN(64))
-        // the packed-bits PROJECTION alone: noop-write vs persist+count
-        val packedCol =
-          graft.expressions.SignBitsPacked(col("embedding"), probes)
-        val (_, tProjNoop) = t {
-          vecs.select(col("vec_id"), packedCol.as("bits"))
-            .write.mode("overwrite").format("noop").save()
-        }
-        val projCached = vecs.select(col("vec_id"), packedCol.as("bits"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val (_, tProjPersist) = t { projCached.count() }
-        projCached.unpersist(true)
-        val stages = scala.collection.mutable.Buffer[(Int, Long, Int, String)]()
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val ms = (for {a <- si.completionTime; b <- si.submissionTime}
-              yield a - b).getOrElse(-1L)
-            stages.synchronized {
-              stages += ((si.stageId, ms, si.numTasks,
-                si.name.linesIterator.next().take(60)))
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        val (_, tPairs) = t {
-          graft.operators.SimilaritySearch
-            .cosinePairsLsh(vecs, threshold = 0.4, nBits = 64, rowsPerBand = 16)
-            .write.mode("overwrite").format("noop").save()
-        }
-        Thread.sleep(500)
-        spark.sparkContext.removeSparkListener(listener)
-        println(f"[probe] layout=$tag n=$n probes=$tProbe%.1f " +
-          f"scan=$tScan%.1f dots1=$d1%.1f dots8=$d8%.1f dots64=$d64%.1f " +
-          f"projNoop=$tProjNoop%.1f projPersist=$tProjPersist%.1f " +
-          f"fullOp=$tPairs%.1f s parts=${vecs.rdd.getNumPartitions}")
-        stages.sortBy(-_._2).take(6).foreach { case (id, ms, nt, nm) =>
-          println(f"[probe]   stage $id%4d ${ms / 1000.0}%7.1f s tasks=$nt%4d $nm")
-        }
-        spark.catalog.clearCache()
-      }
-      parquetScratch.foreach { dir =>
-        import scala.jdk.CollectionConverters._
-        if (java.nio.file.Files.exists(dir))
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-            .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      spark.stop()
-      return
-    }
-
-    val _ = (sfDir, which, time(1) _)
-
-    spark.stop()
   }
 }

@@ -577,12 +577,11 @@ object ScaleRehearsal {
     // staged crawl-batch files for the incremental cluster op (three
     // batches by doc_id residue) — input manufacture, outside the
     // timing, same rationale as the gate index above
-    val incrSrcDir = java.nio.file.Paths.get(
-      graft.operators.Maintenance.scratchDir("graft_incr_src"))
+    val incrRun = graft.streaming.StreamOps.StagedStream.lasting("graft_incr_src")
     val needIncr = onlyOps.forall(_.contains("incr_cluster"))
     if (needIncr) {
       graft.streaming.StreamOps.incrClusterStage(
-        docs.select(col("doc_id"), col("text")), incrSrcDir.toString, 3)
+        docs.select(col("doc_id"), col("text")), incrRun, 3)
       spark.catalog.clearCache()
     }
     // the two CC formulations keep a handle on their constructed frames:
@@ -729,7 +728,7 @@ object ScaleRehearsal {
       // families, fan-out 0.1). The staged src is read per rep with a
       // fresh checkpoint/state dir, so every rep runs the full loop.
       "incr_cluster" -> (() => graft.streaming.StreamOps
-        .incrClusterStream(spark, incrSrcDir.toString)),
+        .incrClusterStream(spark, incrRun)),
       // small-file compaction at 100× BYTE volume / 10× file count
       // (480 landed fragments of the 10M-event frame, re-fragmented
       // per rep inside t_synth): the op must cost O(small-file bytes +
@@ -1108,7 +1107,7 @@ object ScaleRehearsal {
     // rehearsals don't accumulate multi-GB temp trees
     locally {
       import scala.jdk.CollectionConverters._
-      Seq(pairsDir, gateDir, incrSrcDir).foreach { d =>
+      Seq(pairsDir, gateDir, java.nio.file.Paths.get(incrRun.work)).foreach { d =>
         if (java.nio.file.Files.exists(d))
           java.nio.file.Files.walk(d).iterator().asScala.toSeq
             .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
@@ -1556,7 +1555,7 @@ object ScaleRehearsal {
     graft.operators.Maintenance.commitWithStats(spark, cowRoot,
       keyed10.repartitionByRange(100, col("event_id")),
       statsColumns = Seq("event_id"))
-    val cowSrc = s"$work/cow_src"
+    val cowRun = new graft.streaming.StreamOps.StagedStream(s"$work/cow")
     (0 until nStripes).foreach { r =>
       keyed10.filter(
           col("event_id") >= lit(r * 1000000000L) &&
@@ -1564,23 +1563,15 @@ object ScaleRehearsal {
           col("event_id") % 3 === 0)
         .withColumn("event_type", lit(s"u$r"))
         .withColumn("value", col("value") * 2)
-        .coalesce(1).write.mode("append").parquet(cowSrc)
+        .coalesce(1).write.mode("append").parquet(cowRun.src)
     }
     val cowStats = new java.util.concurrent.ConcurrentLinkedQueue[
       graft.operators.Maintenance.MergeStats]()
     val tCow = System.nanoTime()
-    val cowQ = spark.readStream.schema(keyed10.schema)
-      .option("maxFilesPerTrigger", "1").parquet(cowSrc)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        cowStats.add(graft.operators.Maintenance.merge(
-          batch.sparkSession, cowRoot, batch, "event_id"))
-        ()
-      }
-      .option("checkpointLocation", s"$work/cow_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try cowQ.processAllAvailable() finally cowQ.stop()
+    cowRun.drain(spark) { (batch, _) =>
+      cowStats.add(graft.operators.Maintenance.merge(
+        batch.sparkSession, cowRoot, batch, "event_id"))
+    }
     val cowSec = (System.nanoTime() - tCow) / 1e9
     val cowMs = {
       import scala.jdk.CollectionConverters._

@@ -52,8 +52,8 @@ class LineageSpec extends SparkSpec {
   test("truncateObserved: metrics ride the checkpoint job and match a recount") {
     // runs after the suite set a checkpoint dir, so this pins the
     // RELIABLE flavor's metric delivery; the local flavor is exercised
-    // by every CC/star loop in the suite (and was probed directly by
-    // `Probe obscheck`)
+    // by every CC/star loop in the suite (its direct check is recorded
+    // in OPTIMIZATION_r15.md §3)
     val df = Seq((1L, 1L), (2L, 5L), (3L, 3L)).toDF("id", "label")
       .withColumn("prev", col("id"))
     val (cp, m) = Lineage.truncateObserved(df,

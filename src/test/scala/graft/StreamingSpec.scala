@@ -563,4 +563,72 @@ class StreamingSpec extends SparkSpec {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_stream_cow_spec")
       .toString
+
+  /** A throwable and its cause chain. */
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("staged runner: micro-batches arrive in slice order under concurrent staging") {
+    // the FIRST slice is by far the largest, so under concurrent
+    // staging its write finishes last — only the pinned mtimes keep it
+    // first in admission order
+    val slices = (0 until 4).map { i =>
+      spark.range(if (i == 0) 300000L else 10L)
+        .select(col("id"), lit(i).as("tag"))
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    StreamOps.StagedStream.reclaimed("graft_runner_spec") { run =>
+      run.stage(slices)
+      run.drain(spark) { (batch, batchId) =>
+        batch.select("tag").distinct().as[Int].collect()
+          .foreach(t => seen.add((batchId, t)))
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq == (0 until 4).map(i => (i.toLong, i)))
+  }
+
+  test("staged runner: a failing slice write or batch body is the runner's exception") {
+    import scala.jdk.CollectionConverters._
+    val ok = spark.range(10).select(col("id"))
+    val bad = spark.range(10).select(
+      when(col("id") === 5, raise_error(lit("stage boom")))
+        .otherwise(col("id")).as("id"))
+    val e1 = intercept[Throwable] {
+      StreamOps.StagedStream.reclaimed("graft_runner_spec") { run =>
+        run.stage(Seq(ok, bad, ok))
+      }
+    }
+    assert(causes(e1).exists(c =>
+      String.valueOf(c.getMessage).contains("stage boom")), e1)
+    // the failure is rethrown only after every staging thread ended
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.isAlive && t.getName.startsWith("graft-stage-")))
+    val e2 = intercept[Throwable] {
+      StreamOps.StagedStream.reclaimed("graft_runner_spec") { run =>
+        run.stage(Seq(ok, ok))
+        run.drain(spark) { (_, batchId) =>
+          if (batchId == 1) throw new IllegalStateException("body boom")
+        }
+      }
+    }
+    assert(causes(e2).exists(c =>
+      String.valueOf(c.getMessage).contains("body boom")), e2)
+  }
+
+  test("staged runner: staging leaves no part-file dir behind in the tmpdir") {
+    def parts(): Set[String] =
+      Option(new java.io.File(sys.props("java.io.tmpdir")).list())
+        .map(_.toSet).getOrElse(Set.empty[String])
+        .filter(_.startsWith("graft_late_part"))
+    val before = parts()
+    val work = StreamOps.StagedStream.reclaimed("graft_runner_spec") { run =>
+      run.stage(Seq(spark.range(5).toDF(), spark.range(7).toDF()))
+      assert(new java.io.File(run.src).list().sorted.toSeq ==
+        Seq("batch_0.parquet", "batch_1.parquet"))
+      run.work
+    }
+    assert(parts() -- before == Set.empty[String])
+    assert(!new java.io.File(work).exists(), "reclaimed work dir survived")
+  }
 }

@@ -30,26 +30,6 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Bench {
 
-  /** The last completed QueryExecution, captured through the listener
-    * bus. The DataFrame handed to `df.write` is planned inside a NEW
-    * QueryExecution wrapping the write command — `df.queryExecution`
-    * itself never executes, so reading it would report the
-    * pre-execution static plan (AQE `isFinalPlan=false`) and miss any
-    * runtime re-plan (demoted broadcasts, coalesced shuffles). The bus
-    * is FIFO and single-threaded, so after draining, `qe` is the write
-    * that just ran. */
-  private object LastQE
-      extends org.apache.spark.sql.util.QueryExecutionListener {
-    @volatile var seq: Long = 0L
-    @volatile var qe: org.apache.spark.sql.execution.QueryExecution = _
-    override def onSuccess(funcName: String,
-        q: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit = { qe = q; seq += 1 }
-    override def onFailure(funcName: String,
-        q: org.apache.spark.sql.execution.QueryExecution,
-        e: Exception): Unit = ()
-  }
-
   /** Node counts parsed from the formatted explain of an executed
     * plan. Formatted mode prints one numbered line per operator
     * ("(3) Exchange"); an EXECUTED adaptive plan additionally renders
@@ -99,29 +79,9 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.listenerManager.register(LastQE)
 
     def consume(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
-
-    /** Formatted explain of the execution that `consume` just ran:
-      * wait for its listener event (bus is async), settle, and read the
-      * final plan; falls back to the static plan if the bus stalls. */
-    def executedPlan(df: DataFrame, seqBefore: Long): String = {
-      val deadline = System.currentTimeMillis() + 5000
-      while (LastQE.seq == seqBefore && System.currentTimeMillis() < deadline)
-        Thread.sleep(10)
-      var last = LastQE.seq
-      var settled = false
-      while (!settled && System.currentTimeMillis() < deadline) {
-        Thread.sleep(50)
-        if (LastQE.seq == last) settled = true else last = LastQE.seq
-      }
-      if (LastQE.seq != seqBefore && LastQE.qe != null)
-        LastQE.qe.explainString(ExplainMode.fromString("formatted"))
-      else
-        df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    }
 
     // warm up the JVM/codegen and the common table reads so startup cost
     // doesn't land on whichever query happens to run first
@@ -185,16 +145,19 @@ object Bench {
     }
     val results = selected.map { case (name, fn) =>
       def once(): (Double, Map[String, Int]) = {
-        val seqBefore = LastQE.seq
-        val t0 = System.nanoTime()
-        // construction is timed: iterative operators (clusters, IVF
-        // training) run real jobs before the final plan exists
-        val df = fn(spark, sfDir)
-        consume(df)
-        val secs = (System.nanoTime() - t0) / 1e9
-        // plan capture (listener drain) happens outside the timed region;
-        // the bus is FIFO, so after settling the last event is the write
-        (secs, planMetrics(executedPlan(df, seqBefore)))
+        // timed: the window's body, construction included (iterative
+        // operators run real jobs before the final plan exists)
+        val (_, cap) = Capture.during(spark)(consume(fn(spark, sfDir)))
+        // the write is the window's last execution; the frame's own
+        // static plan (AQE `isFinalPlan=false`) never stands in for it
+        val plan = cap.executions.lastOption match {
+          case Some(qe) =>
+            planMetrics(qe.explainString(ExplainMode.fromString("formatted")))
+          case None =>
+            System.err.println(s"[bench] $name: no executed plan captured")
+            Map.empty[String, Int]
+        }
+        (cap.secs, plan)
       }
       val (cold, steady, plans) = try {
         val (t1, _) = once()

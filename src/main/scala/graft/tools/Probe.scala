@@ -37,6 +37,10 @@ object Probe {
     try run(spark, sfDir, args) finally spark.stop()
   }
 
+  /** Declared query `name` executed into the noop sink. */
+  private def runQuery(spark: SparkSession, sfDir: String, name: String): Unit =
+    graft.SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+
   /** Micro-batch anatomy of a bounded streaming query: per-batch
     * durationMs breakdown (trigger, addBatch, state commit) straight
     * from StreamingQueryProgress — where the seconds of a
@@ -46,25 +50,16 @@ object Probe {
   private def streamProfile(
       spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val qname = args(1)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val p = e.progress
-          println(s"[streamprofile] batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
-            s"stateOps=${p.stateOperators.map(s =>
-              s"rowsTotal=${s.numRowsTotal} commitMs=${s.commitTimeMs}")
-              .mkString(";")}")
-        }
-      })
     (1 to 2).foreach { rep =>
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(qname)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      println(f"[streamprofile] rep $rep total ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val (_, cap) = graft.Capture.during(spark)(runQuery(spark, sfDir, qname))
+      cap.progress.foreach { p =>
+        println(s"[streamprofile] batch=${p.batchId} " +
+          s"rows=${p.numInputRows} durationMs=${p.durationMs} " +
+          s"stateOps=${p.stateOperators.map(s =>
+            s"rowsTotal=${s.numRowsTotal} commitMs=${s.commitTimeMs}")
+            .mkString(";")}")
+      }
+      println(f"[streamprofile] rep $rep total ${cap.secs}%.2f s")
     }
   }
 
@@ -72,83 +67,47 @@ object Probe {
     * query, one warm execution each. A query whose time is "many tiny
     * jobs" (collects, per-operation metadata work, iterative loops)
     * amplifies per-job fixed cost that plan shape can't show — the
-    * signal that found the maintenance-family metadata jobs. Usage:
-    * `Probe jobcount [substr]` (optional name filter). */
+    * signal that found the maintenance-family metadata jobs. A failed
+    * query prints jobs=-1, is left out of the TOTAL sums and counted
+    * in its `failed=`. Usage: `Probe jobcount [substr]` (optional name
+    * filter). */
   private def jobCount(
       spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val filter = args.lift(1).getOrElse("")
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          tasks.addAndGet(e.stageInfos.map(_.numTasks).sum)
-        }
-      })
-    val sel = graft.SparkEntry.queries.filter(_._1.contains(filter))
-    val rows = sel.map { case (name, fn) =>
+    val rows = graft.SparkEntry.queries.keys.toSeq.filter(_.contains(filter)).map { name =>
       // warm pass (codegen/JIT) at the same dir, untimed and uncounted
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => () }
+      try runQuery(spark, sfDir, name) catch { case _: Throwable => () }
       spark.catalog.clearCache()
-      Thread.sleep(200) // let queued listener events drain
-      val (j0, k0) = (jobs.get, tasks.get)
-      val t0 = System.nanoTime()
-      val ok = try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-      } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200)
+      val (ok, cap) = graft.Capture.during(spark) {
+        try { runQuery(spark, sfDir, name); true } catch { case _: Throwable => false }
+      }
       spark.catalog.clearCache()
-      (name, if (ok) jobs.get - j0 else -1, tasks.get - k0, sec)
-    }.toSeq
+      (name, if (ok) cap.jobs.size else -1, cap.jobs.map(_.tasks).sum, cap.secs)
+    }
     rows.sortBy(-_._2).foreach { case (n, j, k, s) =>
       println(f"[jobcount] $n%-28s jobs=$j%4d tasks=$k%6d sec=$s%7.2f")
     }
-    println(f"[jobcount] TOTAL queries=${rows.size} jobs=${rows.map(_._2).sum} sec=${rows.map(_._4).sum}%.1f")
+    val done = rows.filter(_._2 >= 0)
+    println(f"[jobcount] TOTAL queries=${rows.size} jobs=${done.map(_._2).sum} sec=${done.map(_._4).sum}%.1f failed=${rows.size - done.size}")
   }
 
   /** Job-level anatomy of ONE query: every Spark job's id, duration,
     * task count and call site, in order, for a warm execution. Shows
     * where a high-jobcount query's jobs come from (AQE stages,
-    * checkpoints, collects, loop rounds). Usage: `Probe jobtrace
-    * <query>`. */
+    * checkpoints, collects, loop rounds); ms=-1 marks a job still
+    * running when the query returned. Usage: `Probe jobtrace <query>`. */
   private def jobTrace(
       spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val qname = args(1)
-    case class J(id: Int, t0: Long, tasks: Int, site: String)
-    val started = new java.util.concurrent.ConcurrentHashMap[Int, J]
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          started.put(e.jobId, J(e.jobId, e.time,
-            e.stageInfos.map(_.numTasks).sum,
-            Option(e.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short")))
-              .getOrElse("?")))
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val j = started.get(e.jobId)
-          if (j != null) lines.add(
-            f"[jobtrace] job=${j.id}%4d t0=${j.t0}%d ms=${e.time - j.t0}%6d " +
-              f"tasks=${j.tasks}%5d site=${j.site}")
-        }
-      })
-    val fn = graft.SparkEntry.queries(qname)
     // warm pass
-    try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => () }
-    spark.catalog.clearCache(); Thread.sleep(300); lines.clear()
-    val t0 = System.nanoTime()
-    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    val sec = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
-    lines.forEach(l => println(l))
-    println(f"[jobtrace] $qname total $sec%.2f s, ${lines.size} jobs")
+    try runQuery(spark, sfDir, qname) catch { case _: Throwable => () }
+    spark.catalog.clearCache()
+    val (_, cap) = graft.Capture.during(spark)(runQuery(spark, sfDir, qname))
+    cap.jobs.foreach { j =>
+      println(f"[jobtrace] job=${j.id}%4d t0=${j.start}%d " +
+        f"ms=${j.end.fold(-1L)(_ - j.start)}%6d tasks=${j.tasks}%5d site=${j.site}")
+    }
+    println(f"[jobtrace] $qname total ${cap.secs}%.2f s, ${cap.jobs.size} jobs")
   }
 
   /** Host-speed canary: a DETERMINISTIC synthetic workload with zero
@@ -286,35 +245,20 @@ object Probe {
   private def queryPlan(
       spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     val qname = args(1)
-    val qe = new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.sql.execution.QueryExecution]()
-    spark.listenerManager.register(
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            q: org.apache.spark.sql.execution.QueryExecution,
-            d: Long): Unit = qe.set(q)
-        override def onFailure(f: String,
-            q: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      })
-    val df = graft.SparkEntry.queries(qname)(spark, sfDir)
-    df.write.mode("overwrite").format("noop").save()
-    val deadline = System.nanoTime() + 10000000000L
-    while (qe.get() == null && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    if (qe.get() == null)
-      println("[probe] QueryExecutionListener did not fire within 10 s")
-    else {
-      val plan = qe.get().explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      println("[probe] metrics=" + graft.Bench.planMetrics(plan))
-      // optional third arg: write the full executed (AQE-final) plan to
-      // a file — the per-query before/after evidence the optimization
-      // rounds commit under plans/
-      args.lift(2).foreach { out =>
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(out), plan)
-        println(s"[probe] plan written to $out")
-      }
+    val (_, cap) = graft.Capture.during(spark)(runQuery(spark, sfDir, qname))
+    cap.executions.lastOption match {
+      case None => println("[probe] no executed plan captured")
+      case Some(qe) =>
+        val plan = qe.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        println("[probe] metrics=" + graft.Bench.planMetrics(plan))
+        // optional third arg: write the full executed (AQE-final) plan to
+        // a file — the per-query before/after evidence the optimization
+        // rounds commit under plans/
+        args.lift(2).foreach { out =>
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(out), plan)
+          println(s"[probe] plan written to $out")
+        }
     }
   }
 }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *   - runs exact dedup, MinHash-LSH, PPJoin near-dup, Hash-Min CC,
   *     large/small-star CC, cross-corpus contamination, and the
   *     embedding LSH→CC composition over the synthetic volume;
-  *   - captures EVERY execution fired along the way (iterative CC rounds
-  *     included) through a listener and fails loudly if any plan
+  *   - captures EVERY execution the ops fire (iterative CC rounds
+  *     included) through `graft.Capture` and fails loudly if any plan
   *     contains a `CartesianProduct` or an undocumented
   *     `BroadcastNestedLoopJoin`;
   *   - prints one JSON line with per-op wall seconds + final-plan node
@@ -31,22 +31,6 @@ import org.apache.spark.sql.functions._
   * change the partition count).
   */
 object ScaleRehearsal {
-
-  private object Captured
-      extends org.apache.spark.sql.util.QueryExecutionListener {
-    val plans = scala.collection.mutable.Buffer[String]()
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit =
-      synchronized { plans += qe.executedPlan.toString }
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        e: Exception): Unit = ()
-    def drain(): Seq[String] = {
-      Thread.sleep(300) // async bus; let stragglers land
-      synchronized { val out = plans.toSeq; plans.clear(); out }
-    }
-  }
 
   /** 10× documents: 5 verbatim replicas (dense duplicate clusters) + 5
     * perturbed ones (distinct mass). doc_id spaces are disjoint by
@@ -151,8 +135,8 @@ object ScaleRehearsal {
     }
   }
 
-  /** Time each op in TWO phases, drain every captured plan it fired,
-    * count guard violations.
+  /** Time each op in TWO phases, capture every plan the op phase
+    * fired, count guard violations.
     *
     * Phase split (round-13 finding, the `sketch1000x` probe): the
     * one-phase protocol timed synthetic-input manufacture and the
@@ -184,7 +168,6 @@ object ScaleRehearsal {
       reps: Int = 1,
       extras: Map[String, () => Unit] = Map.empty)
     : Seq[(String, Seq[Double], Seq[Double], Long, Int, Int)] = {
-    Captured.drain()
     ops.map { case (name, f) =>
       var rows = -1L
       var cartesian = 0
@@ -195,14 +178,15 @@ object ScaleRehearsal {
         val tS = System.nanoTime()
         keepResident()
         extras.get(name).foreach(_.apply())
-        Captured.drain() // restoration plans are not the op's
         val synthSecs = (System.nanoTime() - tS) / 1e9
-        // phase 2 — the operator, inputs warm
-        val t0 = System.nanoTime()
-        val df = f()
-        df.write.mode("overwrite").format("noop").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        val all = Captured.drain()
+        // phase 2 — the operator, inputs warm, in one capture window
+        // (restoration above and the row count below are not the op's)
+        val (df, cap) = graft.Capture.during(spark) {
+          val df = f()
+          df.write.mode("overwrite").format("noop").save()
+          df
+        }
+        val all = cap.executions.map(_.executedPlan.toString)
         cartesian += all.count(_.contains("CartesianProduct"))
         bnlj += all.count(_.contains("BroadcastNestedLoopJoin"))
         // every rep's row count goes through the fan-out gate: a
@@ -214,8 +198,7 @@ object ScaleRehearsal {
           s"$name: rep $rep produced $repRows rows, earlier rep(s) $rows")
         rows = repRows
         spark.catalog.clearCache()
-        Captured.drain()
-        (synthSecs, secs)
+        (synthSecs, cap.secs)
       }
       val secRuns = timed.map(_._2)
       System.err.println(
@@ -263,7 +246,6 @@ object ScaleRehearsal {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.shuffle.partitions", parts)
-    spark.listenerManager.register(Captured)
     if (mode == "100x") { run100x(spark, sfDir, parts); return }
     if (mode == "1000x") { run1000x(spark, sfDir, parts); return }
     if (mode == "stream10x") { runStream10x(spark, sfDir, parts); return }

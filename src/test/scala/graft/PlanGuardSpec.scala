@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Two plan sources per query, because one is not enough:
   *  - the final frame's explain (what a consumer would execute);
-  *  - every batch execution fired DURING construction, captured via a
-  *    QueryExecutionListener — iterative operators (connected
+  *  - every batch execution fired DURING construction, captured by
+  *    `Capture.during` — iterative operators (connected
   *    components, IVF training) run real jobs whose plans are invisible
   *    in the returned frame once `localCheckpoint` truncates lineage.
   */
@@ -67,49 +67,28 @@ class PlanGuardSpec extends SparkSpec {
     // x_ngram_lm's 1-row OOV-floor scalar through its stages
     "x_pipeline_ccnet")
 
-  private object Captured
-      extends org.apache.spark.sql.util.QueryExecutionListener {
-    val plans = scala.collection.mutable.Buffer[String]()
-    override def onSuccess(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        durationNs: Long): Unit =
-      synchronized { plans += qe.executedPlan.toString }
-    override def onFailure(funcName: String,
-        qe: org.apache.spark.sql.execution.QueryExecution,
-        e: Exception): Unit = ()
-    def drain(): Seq[String] = {
-      Thread.sleep(250) // listener bus is async; let stragglers land
-      synchronized { val out = plans.toSeq; plans.clear(); out }
-    }
-  }
-
   test("no declared query plans a CartesianProduct; BNLJ only where documented") {
-    spark.listenerManager.register(Captured)
-    try {
-      Captured.drain() // discard anything pending from earlier suites
-      // Per-query try/catch: a query that fails analysis is reported by
-      // NAME as its own offender instead of aborting the whole audit —
-      // the round-5 events-loader bug surfaced here as one opaque
-      // mid-audit crash that hid which queries were broken.
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          try {
-            val finalPlan = fn(spark, sf).queryExecution
-              .explainString(ExplainMode.fromString("formatted"))
-            val allPlans = finalPlan +: Captured.drain()
-            val cartesian = allPlans.exists(_.contains("CartesianProduct"))
-            val bnlj = !bnljAllowed.contains(name) &&
-              allPlans.exists(_.contains("BroadcastNestedLoopJoin"))
-            (if (cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
-              (if (bnlj) Seq(s"$name: undocumented BroadcastNestedLoopJoin") else Nil)
-          } catch {
-            case e: Exception =>
-              Captured.drain()
-              Seq(s"$name: failed to plan — ${e.getClass.getSimpleName}: " +
-                e.getMessage.linesIterator.take(1).mkString)
-          }
-      }
-      assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.listenerManager.unregister(Captured)
+    // Per-query try/catch: a query that fails analysis is reported by
+    // NAME as its own offender instead of aborting the whole audit —
+    // the round-5 events-loader bug surfaced here as one opaque
+    // mid-audit crash that hid which queries were broken.
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        try {
+          val (finalPlan, cap) = Capture.during(spark)(fn(spark, sf)
+            .queryExecution.explainString(ExplainMode.fromString("formatted")))
+          val allPlans = finalPlan +: cap.executions.map(_.executedPlan.toString)
+          val cartesian = allPlans.exists(_.contains("CartesianProduct"))
+          val bnlj = !bnljAllowed.contains(name) &&
+            allPlans.exists(_.contains("BroadcastNestedLoopJoin"))
+          (if (cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
+            (if (bnlj) Seq(s"$name: undocumented BroadcastNestedLoopJoin") else Nil)
+        } catch {
+          case e: Exception =>
+            Seq(s"$name: failed to plan — ${e.getClass.getSimpleName}: " +
+              e.getMessage.linesIterator.take(1).mkString)
+        }
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -147,34 +147,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  /** Dataset-level executions (actions) fired while `body` runs,
-    * counted through the QueryExecutionListener bus (async — polled
-    * until stable). AQE sub-stages and checkpoint RDD jobs don't count;
-    * this measures how many ACTIONS the operator launches. */
-  private def executionsDuring(body: => Unit): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = counter.incrementAndGet()
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      body
-      var n = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(50)
-        val now = counter.get()
-        if (now == n) stable += 1 else { n = now; stable = 0 }
-      }
-      n
-    } finally spark.listenerManager.unregister(l)
-  }
-
   test("winnowing guarantee: docs sharing a w+k-1 token run share a fingerprint") {
     import graft.operators.TextAnalysis
     // Schleimer et al. theorem 1: any match of length >= w + k - 1
@@ -228,6 +200,9 @@ class PropertySpec extends SparkSpec {
     // (round checkpoint + the SINGLE fused convergence probe) + 1 for
     // the final count() here. The separate count()+exceptAll().count()
     // probe this replaced costs 3 per round and would land at 6.
+    // Counted: Dataset-level executions (actions); AQE sub-stages and
+    // checkpoint RDD jobs don't count.
+    def executionsDuring(body: => Unit) = Capture.during(spark)(body)._2.executions.size
     val pairs = Seq((1L, 2L), (3L, 4L)).toDF("d1", "d2")
     val starActs = executionsDuring {
       assert(Dedup.clustersStar(pairs).count() > 0)

@@ -894,7 +894,7 @@ object Maintenance {
   def scratchDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(
-      new Thread(() => deleteRecursively(dir.toFile)))
+      new Thread(() => deleteRecursively(dir.toString)))
     dir.toString
   }
 
@@ -913,10 +913,15 @@ object Maintenance {
     if (!errs.isEmpty) throw errs.peek()
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
+  /** Recursively delete a local throwaway directory (no SparkSession
+    * needed — it also runs from [[scratchDir]]'s shutdown hook); a
+    * missing path is a no-op. */
+  private[graft] def deleteRecursively(path: String): Unit = {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get(path)
+    if (Files.exists(root))
+      Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
   }
 
   // ---------------------------------------------------------------

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{abs, assert_true, coalesce, col, concat, 
 import graft.{Conventions, Tables}
 import graft.operators.{Curation, Dedup, Maintenance, Multimodal, Packing, SimilaritySearch, TextAnalysis}
 import graft.sources.Sinks
+import graft.streaming.StreamOps
 
 /** Tier X — training-data-pipeline extensions (SURVEY.md §2.2 Tier X +
   * BASELINE.json north star): dedup family, similarity search, text
@@ -424,15 +425,10 @@ object TierX {
       require(reclaimed == Seq(1),
         s"vacuum keep-2 must reclaim exactly gen 1 (gen 2 is pinned " +
           s"by the rollback pointer), got $reclaimed")
-      val out = Maintenance.readCurrent(s, root)
-        .orderBy("event_type")
       // a handful of per-type rows: pin driver-side so the throwaway
       // root can be reclaimed (the StreamOps maintenance-run lifecycle)
-      val rows = out.collect().toIndexedSeq
-      val pinned = s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        out.schema)
+      val pinned = StreamOps.pinTinyResult(s,
+        Maintenance.readCurrent(s, root).orderBy("event_type"))
       Maintenance.deleteRoot(s, work)
       pinned
     }),
@@ -844,14 +840,8 @@ object TierX {
       // export dir (the StreamOps maintenance-run lifecycle)
       val work = java.nio.file.Files
         .createTempDirectory("graft_export").toString
-      val out = Packing.exportShards(docs(s, d),
-        shardTokens = 2000, outDir = s"$work/shards")
-        .orderBy("shard_id")
-      val rows = out.collect().toIndexedSeq
-      val pinned = s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        out.schema)
+      val pinned = StreamOps.pinTinyResult(s, Packing.exportShards(docs(s, d),
+        shardTokens = 2000, outDir = s"$work/shards").orderBy("shard_id"))
       Maintenance.deleteRoot(s, work)
       pinned
     }),

@@ -24,27 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamOps {
 
-  /** Recursively delete a throwaway work directory (source copies,
-    * checkpoint, state generations). The maintenance runs materialize
-    * their tiny verdict result on the driver first, so nothing lazy
-    * still points at the deleted files. */
-  private def deleteWorkDir(path: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    import java.util.Comparator
-    val root = Paths.get(path)
-    if (Files.exists(root)) {
-      Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    }
-  }
-
   /** Pin a lazily-built TINY result (a few verdict/aggregate rows) as
-    * a driver-local relation so the temp dirs backing it can be
-    * deleted. The collect is bounded by construction — one row per
+    * a driver-local relation on `spark` so the temp dirs backing it can
+    * be deleted. The collect is bounded by construction — one row per
     * group key, KBs total. */
-  private def pinTinyResult(df: DataFrame): DataFrame = {
+  private[graft] def pinTinyResult(spark: SparkSession, df: DataFrame): DataFrame = {
     val rows = df.collect().toIndexedSeq
-    df.sparkSession.createDataFrame(
+    spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       df.schema)
@@ -96,7 +82,7 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
-      finally deleteWorkDir(ckpt)
+      finally graft.operators.Maintenance.deleteRecursively(ckpt)
     }
   }
 
@@ -111,7 +97,7 @@ object StreamOps {
     def reclaimed[A](prefix: String)(f: StagedStream => A): A = {
       val run = new StagedStream(
         java.nio.file.Files.createTempDirectory(prefix).toString)
-      try f(run) finally deleteWorkDir(run.work)
+      try f(run) finally graft.operators.Maintenance.deleteRecursively(run.work)
     }
   }
 
@@ -121,7 +107,7 @@ object StreamOps {
     * as a NEW generation before the pointer flips, so a reader never
     * sees a half-merged state (at warehouse scale the flip is an atomic
     * table pointer). Returns the final generation's path. */
-  private def foldGenerations(spark: SparkSession, run: StagedStream)(
+  private[graft] def foldGenerations(spark: SparkSession, run: StagedStream)(
       partial: DataFrame => DataFrame,
       merge: DataFrame => DataFrame): String = {
     val current = new java.util.concurrent.atomic.AtomicReference[String](null)
@@ -627,7 +613,7 @@ object StreamOps {
         _.groupBy("event_type")
           .agg(sum("n").as("n"), sum("total_e6").as("total_e6")))
       // one row per event_type — pinned before the work dir is reclaimed
-      pinTinyResult(spark.read.parquet(state)
+      pinTinyResult(spark, spark.read.parquet(state)
         .select(col("event_type"), col("n"),
           (col("total_e6").cast("double") / lit(1000000d)).as("total")))
     }
@@ -673,7 +659,7 @@ object StreamOps {
             .withColumn("event_type", lit("__all__")))
       // one verdict row per event_type — pinned before the source
       // copies, checkpoint and state generations are reclaimed
-      pinTinyResult(approx.join(exact, "event_type")
+      pinTinyResult(spark, approx.join(exact, "event_type")
         .select(
           col("event_type"), col("n_sketches"),
           col(SketchStore.RowCountCol).as("n_events"), col("n_users"),
@@ -788,7 +774,7 @@ object StreamOps {
       val landed = spark.read
         .option("recursiveFileLookup", "true").parquet(bronze)
         .select(col("doc_id"), lit(true).as("landed"))
-      pinTinyResult(train.select(col("doc_id"), col("lang"))
+      pinTinyResult(spark, train.select(col("doc_id"), col("lang"))
         .join(landed, Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"),
           coalesce(col("landed"), lit(false)).as("landed")))
@@ -896,6 +882,8 @@ object StreamOps {
     val labelSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("rep_id", LongType),
       StructField("cluster_size", LongType)))
+    def empty(s: SparkSession, schema: StructType): DataFrame = s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     // stream-carried state (see scaladoc): label generations and index
     // segments, batchId-keyed, every frame lineage-truncated
     val gens = scala.collection.mutable.TreeMap[Long, DataFrame]()
@@ -909,8 +897,6 @@ object StreamOps {
       // for them (the batch formulation they must match runs with
       // it on; leaving it off was also A/B'd at 1.07× in r16)
       s.conf.set("spark.sql.adaptive.enabled", "true")
-      def empty(schema: StructType): DataFrame = s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       // the batch is shingled and banded ONCE (eagerly truncated):
       // these two frames serve the within-batch pairs, the index
       // probe, AND the index segment carried below — the previous
@@ -930,7 +916,7 @@ object StreamOps {
       val earlierSegs = segs.rangeUntil(batchId).values.toSeq
       def earlier(pick: ((DataFrame, DataFrame)) => DataFrame,
           schema: StructType): DataFrame =
-        if (earlierSegs.isEmpty) empty(schema)
+        if (earlierSegs.isEmpty) empty(s, schema)
         else earlierSegs.map(pick).reduce(_ unionByName _)
       // eager truncation, NOT persist: the pair set feeds many
       // downstream actions (endpoints, frontier, the CC loop's own
@@ -951,7 +937,7 @@ object StreamOps {
           org.apache.spark.sql.functions.lit(1)).as("n"))
       val noNewPairs = mNP("n").asInstanceOf[Long] == 0L
       val prior = gens.rangeUntil(batchId).lastOption
-        .map(_._2).getOrElse(empty(labelSchema))
+        .map(_._2).getOrElse(empty(s, labelSchema))
       // the frontier frames only exist when the batch produced pairs
       // — on an empty batch the prior generation carries over as-is
       // and no frontier job runs at all
@@ -983,12 +969,7 @@ object StreamOps {
     // pin on the CALLER's session (the carried frames live on the
     // stream's cloned session); the collect is bounded by the
     // docs-in-pairs roster, as before
-    val rows = gens.lastOption.map(_._2.collect().toIndexedSeq)
-      .getOrElse(IndexedSeq.empty)
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      labelSchema)
+    pinTinyResult(spark, gens.lastOption.map(_._2).getOrElse(empty(spark, labelSchema)))
   }
 
   /** Two-pass checkpointed ingest of the events table into a fresh
@@ -1330,6 +1311,6 @@ object StreamOps {
       java.nio.file.Files.setLastModifiedTime(
         java.nio.file.Paths.get(dest),
         java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    } finally deleteWorkDir(tmp) // the _SUCCESS marker and .crc files
+    } finally graft.operators.Maintenance.deleteRecursively(tmp) // the _SUCCESS marker and .crc files
   }
 }

@@ -105,4 +105,8 @@ object Conventions {
 
   /** yyyy-MM-dd string for a date/timestamp column. */
   def dstr(e: Column): Column = date_format(e, "yyyy-MM-dd")
+
+  /** yyyy-MM-dd HH:mm:ss string for a timestamp column — the DuckDB
+    * oracles' `strftime(ts, '%Y-%m-%d %H:%M:%S')`. */
+  def tsStr(e: Column): Column = date_format(e, "yyyy-MM-dd HH:mm:ss")
 }

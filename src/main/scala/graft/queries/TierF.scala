@@ -179,7 +179,8 @@ object TierF {
     * what legalizes a `_corrupt_record`-only subplan (Spark disallows
     * that directly over a raw CSV scan). */
   private val fCsvIngest: Q = (s, d) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    // the result lazily reads the CSV tree: reclaimed at JVM exit
+    val tmp = graft.operators.Maintenance.scratchDir("graft_csv")
     Tables(s, d, "orders")
       .select(
         col("o_orderkey").cast("string").as("o_orderkey"),

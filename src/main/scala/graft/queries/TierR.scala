@@ -581,8 +581,8 @@ object TierR {
       orderCols = Seq("ts", "event_id"),
       attrCols = Seq("event_type"))
       .select(col("user_id"), col("event_type"),
-        date_format(col("eff_from"), "yyyy-MM-dd HH:mm:ss").as("eff_from_s"),
-        date_format(col("eff_to"), "yyyy-MM-dd HH:mm:ss").as("eff_to_s"),
+        Conventions.tsStr(col("eff_from")).as("eff_from_s"),
+        Conventions.tsStr(col("eff_to")).as("eff_to_s"),
         col("is_current"),
         col("eff_from"))
       .orderBy("user_id", "eff_from")
@@ -643,8 +643,8 @@ object TierR {
           .cast("long").as("ver"))
       .filter(col("ver") <= 25)
       .select(col("user_id"), col("ver"), col("event_type"),
-        date_format(col("eff_from"), "yyyy-MM-dd HH:mm:ss").as("eff_from_s"),
-        date_format(col("eff_to"), "yyyy-MM-dd HH:mm:ss").as("eff_to_s"))
+        Conventions.tsStr(col("eff_from")).as("eff_from_s"),
+        Conventions.tsStr(col("eff_to")).as("eff_to_s"))
       .orderBy("user_id", "ver")
   }
 
@@ -673,9 +673,9 @@ object TierR {
           (dim("eff_to").isNull || facts("ts") < dim("eff_to")),
         "left")
       .select(col("event_id"), col("user_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
+        Conventions.tsStr(col("ts")).as("ts_s"),
         col("value"), col("status"),
-        date_format(col("eff_from"), "yyyy-MM-dd HH:mm:ss")
+        Conventions.tsStr(col("eff_from"))
           .as("status_since_s"))
       .orderBy("event_id")
   }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Conventions, Tables}
 import graft.streaming.StreamOps
 
 /** Tier S — streaming queries (SURVEY.md §2.2 `x_stream_*`).
@@ -101,8 +101,8 @@ object TierS {
       // exactly-once ingest makes it equal SCD2 over the raw table
       StreamOps.incrementalScdRun(s, d)
         .select(col("user_id"), col("event_type"),
-          date_format(col("eff_from"), "yyyy-MM-dd HH:mm:ss").as("eff_from_s"),
-          date_format(col("eff_to"), "yyyy-MM-dd HH:mm:ss").as("eff_to_s"),
+          Conventions.tsStr(col("eff_from")).as("eff_from_s"),
+          Conventions.tsStr(col("eff_to")).as("eff_to_s"),
           col("is_current"), col("eff_from"))
         .orderBy("user_id", "eff_from")
         .drop("eff_from")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{abs, assert_true, coalesce, col, concat, concat_ws, count, countDistinct, date_format, explode, expr, floor, greatest, length, lit, lpad, max, min, pmod, round, slice, split, substring, sum, to_date, upper, when}
+import org.apache.spark.sql.functions.{abs, assert_true, coalesce, col, concat, concat_ws, count, countDistinct, explode, expr, floor, greatest, length, lit, lpad, max, min, pmod, round, slice, split, substring, sum, to_date, upper, when}
 
 import graft.{Conventions, Tables}
 import graft.operators.{Curation, Dedup, Maintenance, Multimodal, Packing, SimilaritySearch, TextAnalysis}
@@ -111,17 +111,16 @@ object TierX {
       // first landed the way a one-file-per-trigger streaming sink
       // leaves it — 12 batchId-named segments x 4 files — then
       // Maintenance.compactDir bin-packs the sub-threshold files into
-      // target-size outputs (write-new, move-in, delete-old) and a
-      // SECOND pass must select nothing: the fixpoint is the
-      // idempotence contract a scheduled compactor converges on. The
+      // target-size outputs (write-new, move-in, delete-old). The
       // oracle reads the raw table — compaction re-blocks bytes, it
-      // must never change a row. Bench attribution: this query times
-      // the whole LIFECYCLE (land fragmented + compact + fixpoint +
-      // read-back) by design; the operator-attributable number is the
+      // must never change a row. MaintenanceSpec pins the selection and
+      // the fixpoint (a second pass selects nothing). Bench attribution:
+      // this query times the whole LIFECYCLE (land fragmented + compact
+      // + read-back) by design; the operator-attributable number is the
       // split-timing 100x rehearsal row (t_synth excludes the landing)
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       // the result is a lazy read of the compacted tree, so the
       // scratch dir outlives this call — reclaimed at JVM exit
       // (scratchDir shutdown hook), never leaked per run
@@ -134,66 +133,44 @@ object TierX {
           .repartition(4)
           .write.mode("overwrite").parquet(s"$work/batch_$b")
       })
-      val st = Maintenance.compactDir(s, work,
+      Maintenance.compactDir(s, work,
         targetBytes = 128L << 20, minFileBytes = 8L << 20)
-      require(st.filesRewritten >= 48,
-        s"expected the 48 landed fragments selected, got $st")
-      val again = Maintenance.compactDir(s, work,
-        targetBytes = 128L << 20, minFileBytes = 8L << 20)
-      require(again.filesRewritten == 0,
-        s"second compaction must be a fixpoint no-op, got $again")
       s.read.parquet(work).orderBy("event_id")
     }),
     "x_maint_compact_gen" -> ((s, d) => {
       // snapshot-isolated OPTIMIZE: the same events frame committed as
       // a deliberately fragmented generation 1 (48 sub-threshold
       // files), then Maintenance.compactGen packs it into a NEW commit
-      // — gen 1's directory is untouched, so a reader pinned BEFORE
-      // the compaction keeps reading its snapshot unperturbed (the
-      // pinned count is re-checked after the pack), the fixpoint pass
-      // mints no no-op generation, and a keep-1 vacuum then ages the
-      // fragmented original out. The oracle reads the raw table:
-      // compaction re-blocks bytes, never rows — now with the manifest
-      // flip as the atomic swap instead of compactDir's file-level
-      // move-then-delete contract
+      // — gen 1's directory is untouched, so a reader pinned before the
+      // compaction keeps its snapshot (MaintenanceSpec pins that, the
+      // no-op fixpoint pass and the vacuum that ages gen 1 out). The
+      // oracle reads the raw table: compaction re-blocks bytes, never
+      // rows — with the manifest flip as the atomic swap instead of
+      // compactDir's file-level move-then-delete contract
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val root = Maintenance.scratchDir("graft_compact_gen") + "/table"
       Maintenance.commit(s, root, ev.repartition(48))
-      val pinned = Maintenance.readGen(s, root, 1)
-      val nPinned = pinned.count()
-      val (g2, st) = Maintenance.compactGen(s, root,
+      Maintenance.compactGen(s, root,
         targetBytes = 128L << 20, minFileBytes = 8L << 20)
-      require(g2 == 2 && st.filesRewritten == 48,
-        s"expected the 48 fragments packed into gen 2, got ($g2, $st)")
-      require(pinned.count() == nPinned,
-        "pinned gen-1 reader must survive the compaction unperturbed")
-      val (g3, fix) = Maintenance.compactGen(s, root,
-        targetBytes = 128L << 20, minFileBytes = 8L << 20)
-      require(g3 == 2 && fix.filesRewritten == 0,
-        s"second compactGen must be a fixpoint no-op, got ($g3, $fix)")
-      val reclaimed = Maintenance.vacuum(s, root, keepLast = 1)
-      require(reclaimed == Seq(1),
-        s"keep-1 vacuum must reclaim the fragmented gen 1, got $reclaimed")
       Maintenance.readCurrent(s, root).orderBy("event_id")
     }),
     "x_maint_wap" -> ((s, d) => {
       // write-audit-publish: a production ingest lands its candidate
       // state INVISIBLY (stageCommit — hidden staging dir + a manifest
       // row every reader ignores), an AUDIT job re-reads the landed
-      // bytes and runs its expectation checks, and only a passing
-      // candidate publishes — ONE O(metadata) rename, the expensive
-      // write having happened before anything was visible. Readers can
-      // never observe a half-audited batch. Candidate A carries a
-      // corrupted slice (event_type nulled at event_id % 7 = 0): the
-      // audit counts violations on the STAGED table, the stage ABORTS,
-      // and the table provably never exposes it; the re-ingested clean
+      // bytes and counts expectation violations, and only a candidate
+      // with none publishes — ONE O(metadata) rename, the expensive
+      // write having happened before anything was visible; any other
+      // candidate is aborted. Readers can never observe a half-audited
+      // batch. Candidate A carries a corrupted slice (event_type nulled
+      // at event_id % 7 = 0) and aborts; the re-ingested clean
       // candidate B audits green and publishes. Oracle: baseline +
       // clean batch recomputed from the raw table
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val root = Maintenance.scratchDir("graft_wap") + "/table"
       Maintenance.commit(s, root,
         ev.filter(pmod(col("event_id"), lit(3)) === 0))
@@ -202,21 +179,14 @@ object TierX {
           when(pmod(col("event_id"), lit(7)) === 0, lit(null))
             .otherwise(col("event_type")))
       val base = Maintenance.readCurrent(s, root)
-      val stA = Maintenance.stageCommit(s, root,
-        base.unionByName(corrupted))
-      val badA = Maintenance.readStage(s, root, stA)
-        .filter(col("event_type").isNull).count()
-      require(badA > 0,
-        s"audit expected the injected violations to land, got $badA")
-      Maintenance.abortStage(s, root, stA)
-      require(Maintenance.currentGen(s, root) == 1,
-        "an aborted stage must never become visible")
-      val stB = Maintenance.stageCommit(s, root,
-        base.unionByName(corrupted.filter(col("event_type").isNotNull)))
-      require(Maintenance.readStage(s, root, stB)
-        .filter(col("event_type").isNull).count() == 0,
-        "the clean candidate must audit green")
-      Maintenance.publish(s, root, stB)
+      Seq(corrupted, corrupted.filter(col("event_type").isNotNull))
+        .foreach { batch =>
+          val st = Maintenance.stageCommit(s, root, base.unionByName(batch))
+          val violations = Maintenance.readStage(s, root, st)
+            .filter(col("event_type").isNull).count()
+          if (violations == 0) Maintenance.publish(s, root, st)
+          else Maintenance.abortStage(s, root, st)
+        }
       Maintenance.readCurrent(s, root).orderBy("event_id")
     }),
     "x_maint_schema_evolve" -> ((s, d) => {
@@ -256,27 +226,22 @@ object TierX {
       // min/max from parquet FOOTERS (O(files) KB-sized reads on
       // executors, zero data pages re-scanned); a 15%-selective range
       // read then plans its scan over ONLY the files whose range
-      // intersects the predicate — the in-query requires pin that the
-      // metadata actually pruned. Skipping is advisory (the real
-      // filter still applies; a file without usable stats is always
-      // scanned), so the oracle is simply the filtered raw table: the
-      // pruned plan must be invisible in the ANSWER and visible only
-      // in the files-read count
+      // intersects the predicate (MaintenanceSpec pins the pruning).
+      // Skipping is advisory (the real filter still applies; a file
+      // without usable stats is always scanned), so the oracle is
+      // simply the filtered raw table: the pruned plan must be
+      // invisible in the ANSWER and visible only in the files-read count
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val maxId = ev.agg(max("event_id")).head().getLong(0)
       val root = Maintenance.scratchDir("graft_stats_skip") + "/table"
       Maintenance.commitWithStats(s, root,
         ev.repartitionByRange(24, col("event_id")),
         statsColumns = Seq("event_id", "event_type"))
       val (lo, hi) = (maxId / 5, maxId * 7 / 20)
-      val pr = Maintenance.prunedReadCurrent(s, root, "event_id", lo, hi)
-      require(pr.filesTotal >= 20 && pr.filesRead > 0 &&
-        pr.filesRead < pr.filesTotal / 2,
-        s"stats must prune a 15% range to a file minority, got $pr")
-      require(pr.rowsSkipped > 0, s"metadata proved no skipped rows: $pr")
-      pr.df.filter(col("event_id").between(lo, hi)).orderBy("event_id")
+      Maintenance.prunedReadCurrent(s, root, "event_id", lo, hi).df
+        .filter(col("event_id").between(lo, hi)).orderBy("event_id")
     }),
     "x_maint_stats_auto" -> ((s, d) => {
       // data skipping integrated AT THE PLANNER (x_maint_stats_skip's
@@ -286,29 +251,20 @@ object TierX {
       // footer-stats sidecar — the user just writes .filter(...), on
       // any statted column, and FileSourceStrategy hands the
       // predicate to the index at planning time (the Delta/Iceberg
-      // seam). The in-query requires pin BOTH prunings: the 15% range
-      // plans a file-minority scan, and a point lookup plans a
-      // ONE-file scan. Oracle: the filtered raw table — planner
-      // pruning must be invisible in the answer
+      // seam; MaintenanceSpec pins range, point and IN pruning).
+      // Oracle: the filtered raw table — planner pruning must be
+      // invisible in the answer
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val maxId = ev.agg(max("event_id")).head().getLong(0)
       val root = Maintenance.scratchDir("graft_stats_auto") + "/table"
       Maintenance.commitWithStats(s, root,
         ev.repartitionByRange(24, col("event_id")),
         statsColumns = Seq("event_id", "event_type"))
-      val (df, idx) = Maintenance.readCurrentSkipping(s, root)
-      // point lookup: the planner must touch ONE file
-      require(df.filter(col("event_id") === maxId / 2).count() == 1 &&
-        idx.lastDecision._2 == 1,
-        s"point lookup must plan a one-file scan, got ${idx.lastDecision}")
       val (lo, hi) = (maxId * 3 / 5, maxId * 3 / 4)
-      val out = df.filter(col("event_id").between(lo, hi))
-      require(out.count() > 0 &&
-        idx.lastDecision._2 < idx.lastDecision._1 / 2,
-        s"15% range must plan a file-minority scan, got ${idx.lastDecision}")
-      out.orderBy("event_id")
+      Maintenance.readCurrentSkipping(s, root)._1
+        .filter(col("event_id").between(lo, hi)).orderBy("event_id")
     }),
     "x_maint_merge" -> ((s, d) => {
       // copy-on-write MERGE (upsert) with stats-pruned rewrite: the
@@ -318,15 +274,13 @@ object TierX {
       // ranges resolve which files CAN match (broadcast range join
       // probed by one pass over the source); only those files rewrite
       // — every other file is REFERENCED by the new file-granular
-      // generation, never read, never copied. The in-query requires
-      // pin the COW contract: a file minority rewritten, the pinned
-      // gen-1 reader unperturbed, and a keep-1 vacuum reclaiming
-      // NOTHING because gen 1's directory still holds referenced
-      // files. Oracle: upsert semantics recomputed in SQL (source
-      // rows win on key collision, the rest of the table carries over)
+      // generation, never read, never copied (MaintenanceSpec pins the
+      // COW contract: pinned readers, references, vacuum). Oracle:
+      // upsert semantics recomputed in SQL (source rows win on key
+      // collision, the rest of the table carries over)
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val maxId = ev.agg(max("event_id")).head().getLong(0)
       val root = Maintenance.scratchDir("graft_merge") + "/table"
       Maintenance.commitWithStats(s, root,
@@ -343,15 +297,7 @@ object TierX {
         .withColumn("event_id", col("event_id") + lit(10000000L))
         .withColumn("event_type", lit("inserted"))
         .withColumn("value", col("value") + 1)
-      val pinnedN = Maintenance.readGen(s, root, 1).count()
-      val st = Maintenance.merge(s, root, upd.unionByName(ins), "event_id")
-      require(st.filesReferenced > st.filesRewritten,
-        s"COW merge must reference the untouched majority, got $st")
-      require(Maintenance.readGen(s, root, 1).count() == pinnedN,
-        "pinned gen-1 reader must survive the merge unperturbed")
-      require(Maintenance.vacuum(s, root, keepLast = 1).isEmpty,
-        "keep-1 vacuum must preserve gen 1: its files are referenced " +
-          "by the retained merge generation")
+      Maintenance.merge(s, root, upd.unionByName(ins), "event_id")
       Maintenance.readCurrent(s, root).orderBy("event_id")
     }),
     "x_maint_delete" -> ((s, d) => {
@@ -359,18 +305,14 @@ object TierX {
       // training-data lake runs on demand: a localized purge set (a
       // 5% id band, every 5th key) plus keys that do not exist probes
       // the stats sidecar, ONLY the files that can hold a doomed key
-      // rewrite, and the new generation references the rest. The
-      // in-query requires pin the COW contract (file minority
-      // rewritten, metadata-accounted delete count) and the FIXPOINT
-      // contract (a second purge of now-absent keys mints NO
-      // generation — the scheduled-purge idempotence). Snapshot
-      // isolation means the pre-delete generation still holds the
-      // purged rows until vacuum — asserted, because that caveat IS
-      // the compliance pipeline's vacuum-after-delete step. Oracle:
-      // the raw table minus the purge set
+      // rewrite, and the new generation references the rest.
+      // MaintenanceSpec pins the COW contract (file minority rewritten,
+      // metadata-accounted delete count), the fixpoint (a re-purge of
+      // absent keys mints no generation) and snapshot isolation until
+      // vacuum. Oracle: the raw table minus the purge set
       val ev = Tables(s, d, "events").select(
         col("event_id"), col("user_id"), col("event_type"), col("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
+        Conventions.tsStr(col("ts")).as("ts_s"))
       val maxId = ev.agg(max("event_id")).head().getLong(0)
       val root = Maintenance.scratchDir("graft_delete") + "/table"
       Maintenance.commitWithStats(s, root,
@@ -381,21 +323,7 @@ object TierX {
         .filter(col("event_id").between(lo, hi) &&
           pmod(col("event_id"), lit(5)) === 0)
         .select("event_id")
-      val st = Maintenance.delete(s, root, doomed, "event_id")
-      require(st.filesReferenced > st.filesRewritten &&
-        st.filesRewritten > 0,
-        s"COW delete must rewrite only the purge band's files, got $st")
-      require(st.rowsDeleted == doomed.count(),
-        s"metadata-accounted delete count wrong: $st")
-      // snapshot isolation: the purged rows survive in gen 1 until a
-      // retention vacuum — the documented vacuum-after-delete step
-      require(Maintenance.readGen(s, root, 1).count() ==
-        st.rowsDeleted + Maintenance.readCurrent(s, root).count(),
-        "pre-delete snapshot must still hold the purged rows")
-      // fixpoint: purging the now-absent keys mints NO generation
-      val again = Maintenance.delete(s, root, doomed, "event_id")
-      require(again.gen == st.gen && again.filesRewritten == 0,
-        s"second purge of absent keys must be a no-op, got $again")
+      Maintenance.delete(s, root, doomed, "event_id")
       Maintenance.readCurrent(s, root).orderBy("event_id")
     }),
     "x_maint_timetravel" -> ((s, d) => {
@@ -412,25 +340,21 @@ object TierX {
       val work = java.nio.file.Files
         .createTempDirectory("graft_gen_table").toString
       val root = s"$work/table"
-      (0 to 2).foreach { b =>
-        val upTo = ev.filter(pmod(col("event_id"), lit(3)) <= b)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            Conventions.moneySum(col("value")).as("total"))
-        Maintenance.commit(s, root, upTo)
-      }
-      val g4 = Maintenance.rollback(s, root, toGen = 2)
-      require(g4 == 4, s"rollback commit expected gen 4, got $g4")
-      val reclaimed = Maintenance.vacuum(s, root, keepLast = 2)
-      require(reclaimed == Seq(1),
-        s"vacuum keep-2 must reclaim exactly gen 1 (gen 2 is pinned " +
-          s"by the rollback pointer), got $reclaimed")
-      // a handful of per-type rows: pin driver-side so the throwaway
-      // root can be reclaimed (the StreamOps maintenance-run lifecycle)
-      val pinned = StreamOps.pinTinyResult(s,
-        Maintenance.readCurrent(s, root).orderBy("event_type"))
-      Maintenance.deleteRoot(s, work)
-      pinned
+      try {
+        (0 to 2).foreach { b =>
+          val upTo = ev.filter(pmod(col("event_id"), lit(3)) <= b)
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              Conventions.moneySum(col("value")).as("total"))
+          Maintenance.commit(s, root, upTo)
+        }
+        Maintenance.rollback(s, root, toGen = 2)
+        Maintenance.vacuum(s, root, keepLast = 2)
+        // a handful of per-type rows: pin driver-side so the throwaway
+        // root can be reclaimed (the StreamOps maintenance-run lifecycle)
+        StreamOps.pinTinyResult(s,
+          Maintenance.readCurrent(s, root).orderBy("event_type"))
+      } finally Maintenance.deleteRoot(s, work)
     }),
     "x_dedup_incremental" -> ((s, d) =>
       // incremental crawl dedup: batch docs (hash-fated ~10%) survive
@@ -616,8 +540,7 @@ object TierX {
         versionCols = Seq("ts", "event_id"),
         payloadCols = Seq("value"))
         .select(col("user_id"), col("event_type"),
-          org.apache.spark.sql.functions
-            .date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("last_ts"),
+          Conventions.tsStr(col("ts")).as("last_ts"),
           col("event_id").as("last_event_id"), col("value").as("last_value"),
           col("n_versions"))
         .orderBy("user_id", "event_type")),
@@ -840,10 +763,9 @@ object TierX {
       // export dir (the StreamOps maintenance-run lifecycle)
       val work = java.nio.file.Files
         .createTempDirectory("graft_export").toString
-      val pinned = StreamOps.pinTinyResult(s, Packing.exportShards(docs(s, d),
+      try StreamOps.pinTinyResult(s, Packing.exportShards(docs(s, d),
         shardTokens = 2000, outDir = s"$work/shards").orderBy("shard_id"))
-      Maintenance.deleteRoot(s, work)
-      pinned
+      finally Maintenance.deleteRoot(s, work)
     }),
     "x_quality_rep" -> ((s, d) =>
       TextAnalysis.repetitionScore(docs(s, d), threshold = 0.2)
@@ -877,8 +799,7 @@ object TierX {
         opCol = "op",
         payloadCols = Seq("event_type", "value"))
         .select(col("user_id"), col("op"), col("event_type"), col("value"),
-          org.apache.spark.sql.functions
-            .date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
+          Conventions.tsStr(col("ts")).as("ts_s"),
           col("n_versions"))
         .orderBy("user_id")),
     "x_cdc_upsert" -> ((s, d) => {
@@ -908,8 +829,7 @@ object TierX {
         keys, versions, "op", payload)
       ChangeCapture.readCurrentState(s, path, "op")
         .select(col("user_id"), col("op"), col("event_type"), col("value"),
-          org.apache.spark.sql.functions
-            .date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
+          Conventions.tsStr(col("ts")).as("ts_s"),
           col("n_versions"))
         .orderBy("user_id")
     }),

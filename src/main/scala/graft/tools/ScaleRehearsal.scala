@@ -1086,16 +1086,9 @@ object ScaleRehearsal {
     //     them, so final state rows must drop below the mid-stream
     //     peak (the eviction proof the ValueState op cannot give,
     //     since a high-water mark is never evicted by design).
-    val rocksKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(rocksKey)
-    spark.conf.set(rocksKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val (h, ts) = try {
+    val (h, ts) = StreamOps.withRocksDbStateStore(spark) {
       (runStateful("hwm", StreamOps.highWaterMarks(spark, stripedStream())),
         runStateful("timer_sessions", StreamOps.timerSessions(spark, stripedStream())))
-    } finally prevProv match {
-      case Some(v) => spark.conf.set(rocksKey, v)
-      case None    => spark.conf.unset(rocksKey)
     }
 
     // 3) foreachBatch CDC upsert: stripe 0 seeds the partition-pruned

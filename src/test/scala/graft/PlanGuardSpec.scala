@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * may appear only at the documented deliberate tiny-side broadcasts.
   * This is the executable form of the scaling contract (SCALING.md) —
   * a regression that re-introduces an O(n·m) pairing fails CI before it
-  * reaches the bench.
+  * reaches the bench. The same sweep pins conf purity: `spark.conf`
+  * reads the same before and after every query's construction.
   *
   * Two plan sources per query, because one is not enough:
   *  - the final frame's explain (what a consumer would execute);
@@ -74,6 +75,7 @@ class PlanGuardSpec extends SparkSpec {
     // mid-audit crash that hid which queries were broken.
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
+        val confBefore = spark.conf.getAll
         try {
           val (finalPlan, cap) = Capture.during(spark)(fn(spark, sf)
             .queryExecution.explainString(ExplainMode.fromString("formatted")))
@@ -81,8 +83,17 @@ class PlanGuardSpec extends SparkSpec {
           val cartesian = allPlans.exists(_.contains("CartesianProduct"))
           val bnlj = !bnljAllowed.contains(name) &&
             allPlans.exists(_.contains("BroadcastNestedLoopJoin"))
+          // operators must not change session-global conf: a change
+          // races with every concurrent query on the session
+          val confAfter = spark.conf.getAll
+          val confDiff = (confBefore.keySet ++ confAfter.keySet).toSeq.sorted
+            .filter(k => confBefore.get(k) != confAfter.get(k))
+            .map(k => s"$k: ${confBefore.get(k)} -> ${confAfter.get(k)}")
           (if (cartesian) Seq(s"$name: CartesianProduct") else Nil) ++
-            (if (bnlj) Seq(s"$name: undocumented BroadcastNestedLoopJoin") else Nil)
+            (if (bnlj) Seq(s"$name: undocumented BroadcastNestedLoopJoin") else Nil) ++
+            (if (confDiff.nonEmpty)
+              Seq(s"$name: changed session conf ${confDiff.mkString(", ")}")
+            else Nil)
         } catch {
           case e: Exception =>
             Seq(s"$name: failed to plan — ${e.getClass.getSimpleName}: " +

@@ -1,21 +1,23 @@
 #!/bin/bash
-# Same-window A/B adjudication of one bench query against an older code
+# Same-window A/B adjudication of bench queries against an older code
 # boundary — the scripted form of the protocol that settled seven
 # flagged sub-second ratios across rounds 13-14 (SCALING.md). When a
 # merged per-query ratio vs a prior round looks like a regression, the
 # question is "code or environment?": this script answers it in minutes
-# by interleaving fresh-JVM runs of the SAME query from HEAD's classes
-# and from a worktree compiled at <ref>, in one host window, so host
-# drift cancels and only the code difference remains.
+# by interleaving fresh-JVM runs of the SAME queries from HEAD's classes
+# and from a clone compiled at <ref>, in one host window, so host drift
+# cancels and only the code difference remains.
 #
-# Usage: tools/abcompare.sh <query> <ref> [pairs=4] [sfdir=/root/testdata/sf0.1]
+# Usage: tools/abcompare.sh <queries> <ref> [pairs=4] [sfdir]
 #
-#   query  a SparkEntry.queries key (must exist at BOTH commits)
-#   ref    the old code boundary (commit/tag) to compare against
-#   pairs  interleaved A/B pairs; run order flips each pair (ABBA...)
-#          so slow-drift within the window biases neither side
+#   queries  comma-separated SparkEntry.queries keys (each must exist at
+#            BOTH commits); all of them run in one JVM per side and pair
+#   ref      the old code boundary (commit/tag) to compare against
+#   pairs    interleaved A/B pairs; run order flips each pair (ABBA...)
+#            so slow-drift within the window biases neither side
+#   sfdir    the scale-factor table dir (default: the sf0.1 test data)
 #
-# Prints one JSON line:
+# Prints one JSON line per query:
 #   {"probe":"abcompare","query":...,"ref":...,"new_runs":[...],
 #    "old_runs":[...],"min_new":x,"min_old":y,"ratio_new_over_old":r}
 # Adjudication rule (SCALING.md): ratio within ~1.05 at min-of-pairs =>
@@ -23,31 +25,43 @@
 # real regression on a sub-2 s query.
 #
 # Each run is a fresh JVM via the same flags as tools/bench_run.sh
-# (SPARK_GRAFT_BENCH_ONLY selects the query), so the measurement JVM is
-# identical to the committed merge protocol's. Quiet-window rules apply:
-# no sbt/Spark work alongside, idle the host after the worktree compile
-# before the first timed pair.
+# (SPARK_GRAFT_BENCH_ONLY selects the queries), so the measurement JVM
+# is identical to the committed merge protocol's. SPARK_GRAFT_CPUS
+# defaults to this host's core count. Both sides compile with the
+# offline sbt settings of the tier-1 tests (no network is needed): HEAD
+# in place, <ref> in a `git clone` under $TMPDIR that is reused across
+# invocations. Quiet-window rules apply: no sbt/Spark work alongside,
+# idle the host after the compile before the first timed pair.
 set -euo pipefail
 
-QUERY="${1:?usage: abcompare.sh <query> <ref> [pairs] [sfdir]}"
-REF="${2:?usage: abcompare.sh <query> <ref> [pairs] [sfdir]}"
+USAGE="usage: abcompare.sh <query[,query...]> <ref> [pairs] [sfdir]"
+QUERIES="${1:?$USAGE}"
+REF="${2:?$USAGE}"
 PAIRS="${3:-4}"
 SFDIR="${4:-/root/testdata/sf0.1}"
 
-REPO=/root/repo
+REPO=$(cd "$(dirname "$0")/.." && pwd)
 SHORT=$(git -C "$REPO" rev-parse --short "$REF")
-WT="/tmp/graft_ab_$SHORT"
-SCRATCH=$(mktemp -d /tmp/graft_abcompare.XXXXXX)
+OLD="${TMPDIR:-/tmp}/graft_ab_$SHORT"
+SCRATCH=$(mktemp -d "${TMPDIR:-/tmp}/graft_abcompare.XXXXXX")
+trap 'rm -rf "$SCRATCH"' EXIT
 
-# worktree + compile at the old boundary (reused across invocations —
-# the compile is the expensive half, ~2 min; the worktree is inert
-# afterwards and `git worktree remove` reclaims it)
-if [ ! -d "$WT" ]; then
-  git -C "$REPO" worktree add --detach "$WT" "$REF" >&2
+sbt_compile() { # $1 = checkout to compile, offline like the tier-1 tests
+  (cd "$1" && COURSIER_MODE=offline \
+    SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}" \
+    sbt --batch -Dsbt.log.noformat=true compile >&2)
+}
+
+# clone + compile at the old boundary (reused across invocations — the
+# compile is the expensive half, ~2 min; delete the clone to reclaim it)
+if [ ! -d "$OLD" ]; then
+  git clone -q "$REPO" "$OLD" >&2
+  git -C "$OLD" checkout -q --detach "$REF" >&2
 fi
-if [ ! -d "$WT/target/scala-2.13/classes/graft" ]; then
-  (cd "$WT" && sbt -batch compile >&2)
+if [ ! -d "$OLD/target/scala-2.13/classes/graft" ]; then
+  sbt_compile "$OLD"
 fi
+sbt_compile "$REPO"
 
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -58,41 +72,41 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 
 run_one() { # $1 = classes dir, $2 = out json
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   SPARK_GRAFT_SF_DIR="$SFDIR" \
-  SPARK_GRAFT_BENCH_ONLY="$QUERY" \
+  SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
   SPARK_GRAFT_BENCH_OUT="$2" \
   java $ADD_OPENS -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC -Xmx"${SPARK_DRIVER_MEM:-8g}" \
     -cp "$1:/opt/spark/jars/*" graft.Bench \
     > "${2%.json}.stdout.log" 2> "${2%.json}.stderr.log"
-  python3 -c "import json,sys; print(json.load(open('$2'))['queries']['$QUERY'])"
 }
 
 NEW_CP="$REPO/target/scala-2.13/classes"
-OLD_CP="$WT/target/scala-2.13/classes"
-new_runs=() ; old_runs=()
+OLD_CP="$OLD/target/scala-2.13/classes"
 for i in $(seq 1 "$PAIRS"); do
   if [ $((i % 2)) -eq 1 ]; then
-    new_runs+=("$(run_one "$NEW_CP" "$SCRATCH/new_$i.json")")
-    old_runs+=("$(run_one "$OLD_CP" "$SCRATCH/old_$i.json")")
+    run_one "$NEW_CP" "$SCRATCH/new_$i.json"
+    run_one "$OLD_CP" "$SCRATCH/old_$i.json"
   else
-    old_runs+=("$(run_one "$OLD_CP" "$SCRATCH/old_$i.json")")
-    new_runs+=("$(run_one "$NEW_CP" "$SCRATCH/new_$i.json")")
+    run_one "$OLD_CP" "$SCRATCH/old_$i.json"
+    run_one "$NEW_CP" "$SCRATCH/new_$i.json"
   fi
-  echo "[abcompare] pair $i/$PAIRS: new=${new_runs[-1]} old=${old_runs[-1]}" >&2
+  echo "[abcompare] pair $i/$PAIRS done" >&2
 done
 
-python3 - "$QUERY" "$SHORT" "${new_runs[*]}" "${old_runs[*]}" <<'EOF'
+python3 - "$QUERIES" "$SHORT" "$PAIRS" "$SCRATCH" <<'EOF'
 import json, sys
-q, ref = sys.argv[1], sys.argv[2]
-new = [float(x) for x in sys.argv[3].split()]
-old = [float(x) for x in sys.argv[4].split()]
-r = min(new) / min(old) if min(old) > 0 else float('nan')
-print(json.dumps({"probe": "abcompare", "query": q, "ref": ref,
-                  "new_runs": new, "old_runs": old,
-                  "min_new": min(new), "min_old": min(old),
-                  "ratio_new_over_old": round(r, 3)},
-                 separators=(',', ':')))
+queries, ref, pairs, scratch = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4]
+def runs(side, q):
+    return [json.load(open(f"{scratch}/{side}_{i}.json"))["queries"][q]
+            for i in range(1, pairs + 1)]
+for q in [x.strip() for x in queries.split(",") if x.strip()]:
+    new, old = runs("new", q), runs("old", q)
+    r = min(new) / min(old) if min(old) > 0 else float('nan')
+    print(json.dumps({"probe": "abcompare", "query": q, "ref": ref,
+                      "new_runs": new, "old_runs": old,
+                      "min_new": min(new), "min_old": min(old),
+                      "ratio_new_over_old": round(r, 3)},
+                     separators=(',', ':')))
 EOF
-rm -rf "$SCRATCH"

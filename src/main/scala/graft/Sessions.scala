@@ -13,4 +13,19 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+
+  /** Run `body` with `confs` set on the session, then put every key
+    * back the way the caller had it — re-set to its old value if the
+    * caller had set it, unset otherwise — whether `body` returns or
+    * throws. The old values come from `getAll` (explicitly set keys
+    * only): `conf.getOption` returns a key's registered default, and
+    * restoring that would leave the key explicitly set. */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      prev.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }

@@ -5,16 +5,21 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Lineage
+
 /** The reference's end-to-end transform (`fotmob-dag.py:95-165`)
-  * re-expressed as one lazy Catalyst plan over nested JSON match
-  * documents.
+  * re-expressed as Catalyst plans over nested JSON match documents.
   *
   * Where the reference is eager single-threaded pandas (flatten →
-  * rename → clean → 5× dim build → 5× merge → project), this is a
-  * single logical plan: Project → Generate(explode) → CaseWhen →
-  * Aggregate(distinct) → Window(row_number) → BroadcastHashJoin×5 →
-  * Project, optimized as a unit. Dims are tiny and broadcast; the shot
-  * fact table never shuffles for the joins.
+  * rename → clean → 5× dim build → 5× merge → project), this parses
+  * the match documents ONCE: [[shots]] runs Project → Generate(explode)
+  * → CaseWhen and truncates the result ([[graft.operators.Lineage]]),
+  * so every dimension, the fact and the BI view built from one `shots`
+  * value read that materialized table instead of re-scanning the JSON.
+  * Each dimension is Aggregate(distinct) → Window(row_number); the fact
+  * is BroadcastHashJoin×5 → Project; the BI view is one
+  * BroadcastHashJoin. Dims are tiny and broadcast; the shot table
+  * never shuffles for the joins.
   *
   * Reference quirks reproduced faithfully (SURVEY.md §2.1, not "fixed"):
   *  - P6 one-sided clean (`fotmob-dag.py:121`): the Tottenham spelling
@@ -67,8 +72,12 @@ object FotmobPipeline {
     spark.read.schema(matchDocSchema).json(path)
 
   /** S3/P1-P6: nested projection + explode + enrichment + rename +
-    * one-sided clean — the flat shot table (fotmob-dag.py:74-121). */
-  def shots(matches: DataFrame): DataFrame =
+    * one-sided clean — the flat shot table (fotmob-dag.py:74-121).
+    * Eager: the JSON is parsed here, in one job, and the rows are
+    * lineage-truncated, so the five dims and the fact built from the
+    * returned frame share that one scan instead of parsing the
+    * documents once per derivation. */
+  def shots(matches: DataFrame): DataFrame = Lineage.truncate(
     matches
       .select(
         col("matchId"),
@@ -99,7 +108,7 @@ object FotmobPipeline {
         col("home_team_id"),
         col("away_team_name"),
         col("away_team_id"),
-        col("matchId"))
+        col("matchId")))
 
   private def denseDim(
       df: DataFrame, keyCols: Seq[String], idCol: String): DataFrame =
@@ -188,16 +197,23 @@ object FotmobPipeline {
   }
 
   /** K2/J2/P8: the denormalized BI view
-    * (create_looker_data_table.sql:1-26) — fact re-joined with all five
-    * dims on surrogate keys. */
-  def lookerData(shots: DataFrame): DataFrame = {
-    val fact = factTable(shots)
-    fact
-      .join(broadcast(matchDim(shots)), Seq("match_id"))
-      .join(broadcast(teamDim(shots)), Seq("team_id"))
-      .join(broadcast(playerDim(shots)), Seq("player_id"))
-      .join(broadcast(shotTypeDim(shots)), Seq("shot_type_id"))
-      .join(broadcast(eventTypeDim(shots)), Seq("event_type_id"))
+    * (create_looker_data_table.sql:1-26) — the reference re-joins the
+    * fact with all five dims on surrogate keys. Every key but the team's
+    * round-trips: each dense dim is a bijection between natural key and
+    * id, so fact → dim → back lands on the shot's own natural key, and
+    * the inner equi-joins only drop shots whose key is null — which the
+    * filter drops here. `team_id` is unique in `team_dim`, so fact →
+    * team on `teamId` then team on `team_id` reaches the same row as
+    * one `teamId` join, with the same J1 fan-out for a two-spelling
+    * team (and null `teamId` shots dropped by the join). One broadcast
+    * join over `shots` therefore yields the reference's rows exactly
+    * (FidelitySpec pins it against the surrogate-key formulation). */
+  def lookerData(shots: DataFrame): DataFrame =
+    shots
+      .filter(col("matchId").isNotNull && col("player_name").isNotNull &&
+        col("shot_type").isNotNull && col("event_type").isNotNull &&
+        col("situation").isNotNull)
+      .join(broadcast(teamDim(shots)), Seq("teamId"))
       .select(
         // no match column: the reference view (create_looker_data_table
         // .sql:2-17) selects none, so neither do we
@@ -207,5 +223,4 @@ object FotmobPipeline {
         col("shot_from_x"), col("shot_from_y"), col("is_blocked"),
         col("blocked_x"), col("blocked_y"), col("goal_crossed_y"),
         col("goal_crossed_z"))
-  }
 }

@@ -22,6 +22,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   * operator upgrades together, while single-JVM runs (bench, verify,
   * local tests) keep the zero-I/O local form. Values are identical
   * either way; only the recovery story changes.
+  *
+  * The same cut serves a non-iterative caller: a frame that several
+  * derived outputs read. [[graft.fidelity.FotmobPipeline.shots]]
+  * truncates the flat shot table so its five dimensions, the fact and
+  * the BI view share one JSON parse instead of re-scanning the match
+  * documents once per derivation; unlike `persist`, the truncated
+  * frame needs no owner to release it.
   */
 object Lineage {
 

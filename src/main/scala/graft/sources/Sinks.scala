@@ -160,28 +160,17 @@ object Sinks {
     }
 
   /** Bucketed orders/customer pair for the `x_join_bucket`
-    * demonstration query, written once per JVM per scale factor into
-    * the session catalog. Both tables bucket (and sort) on the join
-    * key with the same bucket count, so the join — and the aggregate
-    * that follows on the same key — run with ZERO exchanges.
-    * Returns the (orders, customer) table names. */
+    * demonstration query, written once per JVM per scale factor. Both
+    * tables bucket (and sort) on the join key with the same bucket
+    * count, so the join — and the aggregate that follows on the same
+    * key — run with ZERO exchanges. Returns the (orders, customer)
+    * table names. */
   def ensureBucketedPair(
       spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (String, String) = synchronized {
     val tag = graft.CachePaths.tag(sfDir)
     val (ot, ct) = (s"b_orders_$tag", s"b_customer_$tag")
     if (!writtenLayouts.contains(ot)) {
-      // a managed table whose JVM died leaves its LOCATION behind with
-      // no catalog entry; saveAsTable then refuses even in Overwrite
-      // mode (LOCATION_ALREADY_EXISTS). Drop both the entry and any
-      // orphaned directory before writing.
-      Seq(ot, ct).foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, t.toLowerCase)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
       writeBucketed(
         graft.Tables(spark, sfDir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -195,10 +184,17 @@ object Sinks {
     (ot, ct)
   }
 
+  /** Where [[writeBucketed]] puts its files: one scratch directory per
+    * JVM, reclaimed at exit, so bucketed copies never land in the
+    * working directory's `spark-warehouse/`. */
+  private lazy val bucketedRoot =
+    graft.operators.Maintenance.scratchDir("graft_bucketed")
+
   /** Bucketed layout registered in the session catalog: rows are
     * hash-distributed into `nBuckets` files per partition by
     * `bucketCols`, and sorted within buckets — joins/aggregations on the
-    * bucket keys skip the shuffle entirely. */
+    * bucket keys skip the shuffle entirely. The table is external, its
+    * files under [[bucketedRoot]]. */
   def writeBucketed(
       df: DataFrame,
       table: String,
@@ -208,5 +204,6 @@ object Sinks {
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
+      .option("path", s"$bucketedRoot/$table")
       .saveAsTable(table)
 }

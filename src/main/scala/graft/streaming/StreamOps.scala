@@ -1005,10 +1005,8 @@ object StreamOps {
       name: String,
       out: DataFrame,
       outputMode: String): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, MemoryRunPartitions.toString)
-    try {
+    graft.Sessions.withConf(spark,
+        "spark.sql.shuffle.partitions" -> MemoryRunPartitions.toString) {
       val q = out.writeStream
         .format("memory")
         .queryName(name)
@@ -1016,7 +1014,7 @@ object StreamOps {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    } finally spark.conf.set(key, prev)
+    }
     spark.table(name)
   }
 
@@ -1129,25 +1127,15 @@ object StreamOps {
     * high-water mark is its batch max, so a per-user max aggregate
     * oracles the output exactly. */
   def streamHighWaterRun(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDbStateStore(spark)(runToMemory(spark, "graft_stream_hwm",
-      highWaterMarks(spark, eventsStream(spark, sfDir)), "append"))
+    graft.Sessions.withConf(spark, rocksDbStateStore)(
+      runToMemory(spark, "graft_stream_hwm",
+        highWaterMarks(spark, eventsStream(spark, sfDir)), "append"))
 
-  /** Run `body` with the RocksDB state store provider that
-    * `transformWithState` requires, then restore the session's own
-    * setting. The previous value is read from `getAll` (explicitly set
-    * keys only): `conf.getOption` returns the registered default, and
-    * restoring that would leave the key explicitly set. */
-  private[graft] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  /** The RocksDB state store provider that `transformWithState`
+    * requires, as a [[graft.Sessions.withConf]] pair. */
+  private[graft] val rocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Stream-STATIC join — the remaining Structured Streaming join
     * surface after inner/left/full stream-stream: the event stream
@@ -1181,7 +1169,7 @@ object StreamOps {
     * stay in state and are absent, the same observable-eviction
     * contract as the outer stream joins. */
   def streamTimerSessionRun(spark: SparkSession, sfDir: String): DataFrame =
-    withRocksDbStateStore(spark) {
+    graft.Sessions.withConf(spark, rocksDbStateStore) {
       val out = timerSessions(spark, eventsStream(spark, sfDir))
         .select(col("user_id"),
           Conventions.tsStr(timestamp_micros(col("s_start_us"))).as("s_start"),

@@ -1086,7 +1086,7 @@ object ScaleRehearsal {
     //     them, so final state rows must drop below the mid-stream
     //     peak (the eviction proof the ValueState op cannot give,
     //     since a high-water mark is never evicted by design).
-    val (h, ts) = StreamOps.withRocksDbStateStore(spark) {
+    val (h, ts) = graft.Sessions.withConf(spark, StreamOps.rocksDbStateStore) {
       (runStateful("hwm", StreamOps.highWaterMarks(spark, stripedStream())),
         runStateful("timer_sessions", StreamOps.timerSessions(spark, stripedStream())))
     }
@@ -1272,41 +1272,30 @@ object ScaleRehearsal {
       .withColumn("flag_tag", concat(lit("tag_"), col("l_returnflag")))
       .persist()
     flags.count()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     def agg(j: DataFrame): DataFrame =
       j.groupBy("l_returnflag", "flag_tag")
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("s"))
-    def timeIt(f: () => DataFrame): Double = {
-      val t = System.nanoTime()
-      f().write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t) / 1e9
-    }
-    def withConfs(confs: (String, String)*)(body: => Double): Double = {
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
+    // every op joins by shuffle: the tiny flags side would broadcast
+    def timeIt(confs: (String, String)*)(f: () => DataFrame): Double =
+      graft.Sessions.withConf(spark,
+          ("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: confs: _*) {
+        val t = System.nanoTime()
+        f().write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t) / 1e9
       }
-    }
-    val plain = withConfs(
-      "spark.sql.adaptive.skewJoin.enabled" -> "false") {
-      timeIt(() => agg(li10.join(flags, "l_returnflag")))
-    }
-    val aqeSkew = withConfs(
+    val plain = timeIt(
+      "spark.sql.adaptive.skewJoin.enabled" -> "false")(
+      () => agg(li10.join(flags, "l_returnflag")))
+    val aqeSkew = timeIt(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2") {
-      timeIt(() => agg(li10.join(flags, "l_returnflag")))
-    }
-    val salted = withConfs(
-      "spark.sql.adaptive.skewJoin.enabled" -> "false") {
-      timeIt(() => agg(
-        graft.operators.SkewJoin.saltedJoin(li10, flags, "l_returnflag",
-          saltFactor = 32)))
-    }
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")(
+      () => agg(li10.join(flags, "l_returnflag")))
+    val salted = timeIt(
+      "spark.sql.adaptive.skewJoin.enabled" -> "false")(
+      () => agg(graft.operators.SkewJoin.saltedJoin(li10, flags,
+        "l_returnflag", saltFactor = 32)))
     val timings = Seq("plain" -> plain, "aqe_skew" -> aqeSkew, "salted" -> salted)
     record("skew10x", sfDir, Seq("n_rows" -> n, "partitions" -> parts,
       "ops" -> obj(timings.map { case (k, v) => k -> r2(v) }),

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions._
 
 import graft.fidelity.FotmobPipeline
@@ -70,6 +73,84 @@ class FidelitySpec extends SparkSpec {
     assert(ld.count() == 6)
     assert(ld.columns.toSet.intersect(
       Set("team_name", "player_name", "event_type", "situation")).size == 4)
+  }
+
+  /** The reference's surrogate-key formulation of the BI view
+    * (create_looker_data_table.sql): the fact re-joined with all five
+    * dims on their ids. `lookerData`'s one-join form must equal it. */
+  private def lookerBySurrogateKeys(sh: DataFrame): DataFrame =
+    FotmobPipeline.factTable(sh)
+      .join(broadcast(FotmobPipeline.matchDim(sh)), Seq("match_id"))
+      .join(broadcast(FotmobPipeline.teamDim(sh)), Seq("team_id"))
+      .join(broadcast(FotmobPipeline.playerDim(sh)), Seq("player_id"))
+      .join(broadcast(FotmobPipeline.shotTypeDim(sh)), Seq("shot_type_id"))
+      .join(broadcast(FotmobPipeline.eventTypeDim(sh)), Seq("event_type_id"))
+      .select("shot_id", "team_name", "player_name", "shot_type", "event_type",
+        "situation", "xG", "xGOT", "shot_from_x", "shot_from_y", "is_blocked",
+        "blocked_x", "blocked_y", "goal_crossed_y", "goal_crossed_z")
+
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.columns.toSeq == b.columns.toSeq)
+    val (ra, rb) = (a.collect().map(_.toString).sorted.toSeq,
+      b.collect().map(_.toString).sorted.toSeq)
+    assert(ra == rb)
+  }
+
+  test("looker view equals the surrogate-key re-join on the fixture") {
+    assertSameRows(FotmobPipeline.lookerData(shots), lookerBySurrogateKeys(shots))
+  }
+
+  test("looker view equals the surrogate-key re-join with null keys and a two-spelling team") {
+    import spark.implicits._
+    def shot(id: Int, teamId: String = "10", player: String = "\"P\"",
+        shotType: String = "\"Header\"", event: String = "\"Goal\"",
+        situation: String = "\"SetPiece\"") =
+      s"""{"id":$id,"eventType":$event,"playerName":$player,""" +
+        s""""shotType":$shotType,"situation":$situation,"teamId":$teamId,""" +
+        s""""x":1.0,"y":2.0,"expectedGoals":0.1}"""
+    def doc(matchId: String, home: String, shots: String*) =
+      s"""{"matchId":$matchId,"general":{"homeTeam":{"name":"$home","id":10},""" +
+        s""""awayTeam":{"name":"Tottenham","id":10}},""" +
+        s""""content":{"shotmap":{"shots":[${shots.mkString(",")}]}}}"""
+    val docs = Seq(
+      // teamId 10 has three spellings (home "Tottenham Hotspur" after
+      // the P6 clean, away "Tottenham", home "Spurs"), so every
+      // teamId-10 shot fans out to three rows; teamId 20 has no team
+      doc("\"m1\"", "Tottenham", shot(1), shot(2, player = "null"),
+        shot(3, shotType = "null"), shot(4, situation = "null"),
+        shot(5, event = "null"), shot(6, teamId = "null"), shot(7, teamId = "20")),
+      doc("null", "Tottenham", shot(8)),
+      doc("\"m2\"", "Spurs", shot(9, player = "\"Q\"")))
+    val sh = FotmobPipeline.shots(
+      spark.read.schema(FotmobPipeline.matchDocSchema).json(docs.toDS()))
+    val looker = FotmobPipeline.lookerData(sh)
+    assertSameRows(looker, lookerBySurrogateKeys(sh))
+    // only shots 1 and 9 have every key, each once per spelling
+    assert(looker.select("shot_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 1L, 1L, 9L, 9L, 9L))
+  }
+
+  test("the star parses the match JSON once; the looker view runs in at most 4 jobs") {
+    def scansJson(qe: org.apache.spark.sql.execution.QueryExecution) =
+      qe.optimizedPlan.collectLeaves().exists {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.fileFormat.isInstanceOf[JsonFileFormat]
+          case _ => false
+        }
+        case _ => false
+      }
+    def drain(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    val (sh, star) = Capture.during(spark) {
+      val sh = FotmobPipeline.shots(matches)
+      Seq(FotmobPipeline.matchDim(sh), FotmobPipeline.teamDim(sh),
+        FotmobPipeline.playerDim(sh), FotmobPipeline.shotTypeDim(sh),
+        FotmobPipeline.eventTypeDim(sh), FotmobPipeline.factTable(sh)).foreach(drain)
+      sh
+    }
+    assert(star.executions.count(scansJson) == 1,
+      star.executions.map(_.optimizedPlan.treeString).mkString("\n"))
+    val (_, looker) = Capture.during(spark)(drain(FotmobPipeline.lookerData(sh)))
+    assert(looker.jobs.size <= 4, looker.jobs)
   }
 
   test("end-to-end ETL: pipeline -> write-once sinks -> read-back (K1 semantics)") {

@@ -164,10 +164,7 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState high-water marks emit only on new maxima") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Sessions.withConf(spark, StreamOps.rocksDbStateStore) {
       val mem = MemoryStream[(Long, Double)]
       val q = StreamOps.highWaterMarks(spark, mem.toDF().toDF("user_id", "value"))
         .writeStream.format("memory").queryName("hwm_stream")
@@ -183,11 +180,6 @@ class StreamingSpec extends SparkSpec {
       val rows = spark.table("hwm_stream")
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(rows == Set((1L, 5.0), (2L, 1.0), (1L, 9.0)))
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -296,47 +288,37 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("timer sessions: cross-batch extension, watermark-gated close") {
-    val prevProv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp)]
-    val out = graft.streaming.StreamOps.timerSessions(
-      spark, mem.toDF().toDF("user_id", "ts"))
-    val q = out.writeStream.format("memory").queryName("timer_sess")
-      .outputMode("append").start()
-    try {
-      // batch 1: user 7 events at 10:00 and 10:20 (one session so far)
-      mem.addData(Seq((7L, ts("2024-01-01 10:00:00")),
-        (7L, ts("2024-01-01 10:20:00"))))
-      q.processAllAvailable()
-      assert(spark.table("timer_sess").count() == 0,
-        "no session may close while the watermark could still admit an extension")
-      // batch 2: 10:45 EXTENDS the pending session (within the 30-min
-      // gap of 10:20) — cross-batch merge through the ListState
-      mem.addData(Seq((7L, ts("2024-01-01 10:45:00"))))
-      q.processAllAvailable()
-      assert(spark.table("timer_sess").count() == 0)
-      // batch 3: far-future event pushes the watermark (18:00 - 1h =
-      // 17:00) past the session's close (11:15) -> emitted with the
-      // merged extent; the 18:00 event's own session stays open
-      mem.addData(Seq((7L, ts("2024-01-01 18:00:00"))))
-      q.processAllAvailable()
-      val rows = spark.table("timer_sess").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val expStart = ts("2024-01-01 10:00:00").getTime * 1000L
-      val expEnd = ts("2024-01-01 11:15:00").getTime * 1000L // 10:45 + 30m
-      assert(rows.toSeq == Seq((7L, expStart, expEnd, 3L)),
-        s"got ${rows.toSeq}")
-    } finally {
-      q.stop()
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+    Sessions.withConf(spark, StreamOps.rocksDbStateStore) {
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(Long, Timestamp)]
+      val out = graft.streaming.StreamOps.timerSessions(
+        spark, mem.toDF().toDF("user_id", "ts"))
+      val q = out.writeStream.format("memory").queryName("timer_sess")
+        .outputMode("append").start()
+      try {
+        // batch 1: user 7 events at 10:00 and 10:20 (one session so far)
+        mem.addData(Seq((7L, ts("2024-01-01 10:00:00")),
+          (7L, ts("2024-01-01 10:20:00"))))
+        q.processAllAvailable()
+        assert(spark.table("timer_sess").count() == 0,
+          "no session may close while the watermark could still admit an extension")
+        // batch 2: 10:45 EXTENDS the pending session (within the 30-min
+        // gap of 10:20) — cross-batch merge through the ListState
+        mem.addData(Seq((7L, ts("2024-01-01 10:45:00"))))
+        q.processAllAvailable()
+        assert(spark.table("timer_sess").count() == 0)
+        // batch 3: far-future event pushes the watermark (18:00 - 1h =
+        // 17:00) past the session's close (11:15) -> emitted with the
+        // merged extent; the 18:00 event's own session stays open
+        mem.addData(Seq((7L, ts("2024-01-01 18:00:00"))))
+        q.processAllAvailable()
+        val rows = spark.table("timer_sess").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        val expStart = ts("2024-01-01 10:00:00").getTime * 1000L
+        val expEnd = ts("2024-01-01 11:15:00").getTime * 1000L // 10:45 + 30m
+        assert(rows.toSeq == Seq((7L, expStart, expEnd, 3L)),
+          s"got ${rows.toSeq}")
+      } finally q.stop()
     }
   }
 

@@ -355,7 +355,7 @@ object Maintenance {
   def statsFor(
       spark: SparkSession, root: String,
       gen: Int): Option[Seq[TableStats.ColStats]] = {
-    val (dataGen, _) = resolveData(spark, root, gen)
+    val (dataGen, _, _) = resolveData(spark, root, gen)
     val d = statsDir(root, dataGen)
     if (!hadoopFs(spark, root).exists(new Path(d))) None
     else Some(TableStats.readSidecarLocal(
@@ -375,7 +375,7 @@ object Maintenance {
       spark: SparkSession, root: String, column: String,
       lo: Any, hi: Any): TableStats.PrunedRead = {
     val g = currentGen(spark, root)
-    val (dataGen, filesOpt) = resolveData(spark, root, g)
+    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
     val fs = hadoopFs(spark, root)
     val allFiles = filesOpt.getOrElse(
       dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
@@ -413,7 +413,7 @@ object Maintenance {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val g = currentGen(spark, root)
-    val (dataGen, filesOpt) = resolveData(spark, root, g)
+    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
     val fs = hadoopFs(spark, root)
     val files = filesOpt
       .map(_.map(f => fs.getFileStatus(new Path(f))))
@@ -474,7 +474,7 @@ object Maintenance {
       spark: SparkSession, root: String, source: DataFrame,
       key: String): MergeStats = {
     val g = currentGen(spark, root)
-    val (dataGen, filesOpt) = resolveData(spark, root, g)
+    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
     val fs = hadoopFs(spark, root)
     val allFiles = filesOpt.getOrElse(
       dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
@@ -548,7 +548,7 @@ object Maintenance {
       spark: SparkSession, root: String, keys: DataFrame,
       key: String): DeleteStats = {
     val g = currentGen(spark, root)
-    val (dataGen, filesOpt) = resolveData(spark, root, g)
+    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
     val fs = hadoopFs(spark, root)
     val allFiles = filesOpt.getOrElse(
       dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
@@ -766,9 +766,9 @@ object Maintenance {
     * Throws with the generation named if it was vacuumed — a pinned
     * reader must fail loudly, not silently read an empty dir. */
   def readGen(spark: SparkSession, root: String, gen: Int): DataFrame = {
-    val (dataGen, files) = resolveData(spark, root, gen)
+    val (dataGen, files, schemaJson) = resolveData(spark, root, gen)
     val fs = hadoopFs(spark, root)
-    val raw = files match {
+    val paths = files match {
       case Some(fl) =>
         // file-granular generation: its rows may live across several
         // older directories; vacuum reclaims whole dirs, so checking
@@ -777,33 +777,47 @@ object Maintenance {
           require(fs.exists(d),
             s"gen=$gen references files under vacuumed directory $d")
         }
-        spark.read.parquet(fl: _*)
+        fl
       case None =>
         val dir = genDir(root, dataGen)
         require(fs.exists(new Path(dir)),
           s"gen=$gen (data_gen=$dataGen) was vacuumed; oldest retained " +
             s"generation is recorded in the manifest's vacuum rows")
-        spark.read.parquet(dir)
+        Seq(dir)
     }
-    reconcileToCurrent(spark, root, raw, dataGen)
+    reconcileToCurrent(spark, root, readParquet(spark, schemaJson, paths), dataGen)
   }
 
   /** Resolve `gen` through any rollback pointer to (data_gen, file
-    * list if the holding commit is file-granular). */
+    * list if the holding commit is file-granular, the holding commit's
+    * schema_json — the physical schema of those files). */
   private def resolveData(
       spark: SparkSession, root: String,
-      gen: Int): (Int, Option[Seq[String]]) = {
+      gen: Int): (Int, Option[Seq[String]], String) = {
     val rows = manifestEntries(spark, root)
       .filter(e => e.action == "commit" || e.action == "rollback")
-      .map(e => (e.gen, e.dataGen, e.files))
-    val m = rows.find(_._1 == gen)
+    val m = rows.find(_.gen == gen)
     require(m.nonEmpty, s"gen=$gen not in manifest")
-    val dataGen = m.get._2
+    val dataGen = m.get.dataGen
     // a rollback row carries no file list of its own — the commit that
     // WROTE data_gen does (commit rows have gen == data_gen)
-    val holder = if (dataGen == gen) m else rows.find(_._1 == dataGen)
-    val files = holder.flatMap(h => Option(h._3)).map(decodeFiles)
-    (dataGen, files.filter(_.nonEmpty))
+    val holder = if (dataGen == gen) m else rows.find(_.gen == dataGen)
+    val files = holder.flatMap(h => Option(h.files)).map(decodeFiles)
+    (dataGen, files.filter(_.nonEmpty), holder.map(_.schemaJson).orNull)
+  }
+
+  /** Parquet `paths` read under `schemaJson`, so no Spark job infers a
+    * schema (rows that predate the column, null here, still infer).
+    * Spark lists more root paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a
+    * listing job; longer lists are read in chunks of that size and
+    * unioned, each chunk listed without a job. */
+  private def readParquet(
+      spark: SparkSession, schemaJson: String, paths: Seq[String]): DataFrame = {
+    val reader = Option(schemaJson).fold(spark.read)(j =>
+      spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType]))
+    val chunk = math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+    paths.grouped(chunk).map(reader.parquet(_: _*)).reduce(_ union _)
   }
 
   /** Forward-reconcile a snapshot written at `dataGen` to the latest
@@ -1129,17 +1143,15 @@ object Maintenance {
     val dataGen = src.dataGen
     val nRows = src.nRows
     val fs = hadoopFs(spark, root)
-    val all = resolveData(spark, root, g)._2 match {
+    val (_, files, schemaJson) = resolveData(spark, root, g)
+    val all = files match {
       case Some(fl) => fl.map(f => fs.getFileStatus(new Path(f)))
       case None     => dataFiles(fs, genDir(root, dataGen))
     }
     val small = all.filter(_.getLen < minFileBytes)
     if (small.size < 2)
       return (g, CompactStats(0, all.size.toLong, 0L, 0L, 0L))
-    val commits = entries.filter(_.action == "commit").sortBy(_.gen)
-    val schemaJson = commits.find(_.gen == dataGen)
-      .map(_.schemaJson).orNull
-    val headJson = commits.last.schemaJson
+    val headJson = entries.filter(_.action == "commit").maxBy(_.gen).schemaJson
     // a rollback across a schema change leaves the current rows
     // physically under the OLD names (readGen reconciles on read); a
     // byte-copy pack of those files would mint a head commit whose
@@ -1154,8 +1166,7 @@ object Maintenance {
     val smallBytes = small.map(_.getLen).sum
     val nOut = math.max(1L,
       (smallBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read
-      .parquet(small.map(_.getPath.toString): _*)
+    readParquet(spark, schemaJson, small.map(_.getPath.toString))
       .coalesce(nOut)
       .write.mode("overwrite").parquet(outDir.toString)
     val packed = dataFiles(fs, outDir.toString)

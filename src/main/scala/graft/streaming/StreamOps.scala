@@ -988,10 +988,14 @@ object StreamOps {
   }
 
   /** Shuffle partitions of a [[runToMemory]] run: every stateful
-    * operator materializes one state store PER shuffle partition, and
-    * for a bounded single-microbatch run that fixed cost dominates
-    * (measured: the stream-stream join at sf0.1 runs 2.5× faster at 8
-    * partitions than 32, identical results). An unbounded production
+    * operator keeps one state store PER shuffle partition, and for a
+    * bounded single-microbatch run each store's fixed commit cost
+    * dominates (measured: the stream-stream join at sf0.1 ran 2.5×
+    * faster at 8 partitions than 32, identical results). That cost was
+    * not the store's rows: Hadoop's local filesystem started about 20
+    * `chmod`/`ls`/`readlink` processes per store file it wrote, which
+    * the session's [[graft.NioLocalFs]] no longer does (SCALING.md has
+    * the per-store figure after that change). An unbounded production
     * query sizes partitions to throughput instead — this is the
     * bounded-harness setting. */
   private val MemoryRunPartitions = 8

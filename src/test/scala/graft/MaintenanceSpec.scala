@@ -572,6 +572,27 @@ class MaintenanceSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed"))
   }
 
+  test("compactGen on 48 small files runs one job: the pack's write") {
+    val root = tmp() + "/t"
+    val ev = Tables(spark, sf, "events")
+      .select("event_id", "event_type", "value")
+    // more paths than spark.sql.sources.parallelPartitionDiscovery.threshold
+    Maintenance.commit(spark, root, ev.repartition(48))
+    val ((g2, st), cap) = Capture.during(spark) {
+      Maintenance.compactGen(spark, root,
+        targetBytes = 128L << 20, minFileBytes = 8L << 20)
+    }
+    assert(g2 == 2 && st.filesRewritten == 48 && st.filesWritten == 1, st)
+    // no listing job and no schema-inference job (the manifest holds
+    // the schema)
+    assert(cap.jobs.size == 1, cap.jobs)
+    // reading a generation back infers nothing: no job until an action
+    val (current, read) = Capture.during(spark)(Maintenance.readCurrent(spark, root))
+    assert(read.jobs.isEmpty, read.jobs)
+    assert(current.orderBy("event_id").collect().toSeq ==
+      ev.orderBy("event_id").collect().toSeq)
+  }
+
   test("compactGen refuses a rollback that crossed a schema change") {
     val root = tmp() + "/t"
     Maintenance.commit(spark, root,

@@ -6,16 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites — one local SparkSession per JVM. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
+    val b = Sessions.localBuilder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         // fresh per JVM: the in-memory catalog forgets tables between
         // runs but a reused directory would collide on saveAsTable
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.ui.enabled", "false")
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

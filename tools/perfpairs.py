@@ -13,9 +13,14 @@ host's speed over the window biases neither side.
 
 For each metric it prints each side's median and quartiles, the ratio of
 the medians (change / parent), and how many pairs the change won, with the
-direction taken from BENCHMARK.json (ties count for neither side). It also
-prints every run's correct/failed counts. The last line of standard output
-is one JSON object with every run's metrics.
+direction taken from BENCHMARK.json (ties count for neither side). The same
+table follows for each call's median wall (the run's `# call <name>: median`
+line), so a `call_p50_s` change names the call that moved. Every run's
+correct/failed counts are printed with its host canaries (single-thread,
+multi-thread and IO rates before and after the run), so a run taken in a
+slow host window shows up; the canaries' medians per side close the report.
+The last line of standard output is one JSON object with every run's
+metrics, call medians and canaries.
 
 To measure uncommitted work, stage new files and pass
 `--change "$(git stash create)"`: that names a commit of the working tree
@@ -24,6 +29,7 @@ without moving any ref.
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -31,6 +37,9 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CALL_LINE = re.compile(r"# call (\S+): median ([0-9.]+) s over \d+$")
+CANARY_LINE = re.compile(r"# canary before=(\{.*\}) after=(\{.*\})$")
+CANARY_KEYS = ("single_mb_s", "multi_mb_s", "io_mb_s")
 
 
 def log(msg):
@@ -59,7 +68,18 @@ def run_once(copy, a, seed):
     if r.returncode != 0:
         sys.stderr.write(r.stdout[-3000:] + r.stderr[-3000:])
         sys.exit(f"perfbench failed in {copy} (seed {seed})")
-    return json.loads(r.stdout.strip().splitlines()[-1])
+    lines = r.stdout.strip().splitlines()
+    res = json.loads(lines[-1])
+    res["calls"] = {m.group(1): float(m.group(2)) for m in
+                    (CALL_LINE.match(ln) for ln in lines) if m}
+    canary = next(ln for ln in lines if ln.startswith("# canary "))
+    before, after = CANARY_LINE.match(canary).groups()
+    res["canary"] = {"before": json.loads(before), "after": json.loads(after)}
+    return res
+
+
+def fmt_canary(c):
+    return "/".join(f"{c[k]:.0f}" for k in CANARY_KEYS)
 
 
 def quartiles(xs):
@@ -99,25 +119,39 @@ def main():
                 res["seed"] = seed
                 runs[side].append(res)
                 log(f"# pair {i} seed {seed} {side}: correct={res['correct']} "
-                    f"failed={res['failed']}/{res['attempted']}")
+                    f"failed={res['failed']}/{res['attempted']} canary MB/s "
+                    f"(single/multi/io) before {fmt_canary(res['canary']['before'])} "
+                    f"after {fmt_canary(res['canary']['after'])}")
 
         log(f"# {a.workload}: parent={a.parent} change={a.change} pairs={a.pairs} "
             f"seeds={a.first_seed}..{a.first_seed + a.pairs - 1} "
             f"seconds={a.seconds} trace={a.trace}")
         log(f"# {'metric':36} {'parent median [q1, q3]':>32} "
             f"{'change median [q1, q3]':>32} {'ratio':>7} wins")
-        names = [n for n in runs["parent"][0]["metrics"]
-                 if all(n in r["metrics"] for r in runs["parent"] + runs["change"])]
-        for n in names:
-            pv = [r["metrics"][n]["value"] for r in runs["parent"]]
-            cv = [r["metrics"][n]["value"] for r in runs["change"]]
-            sign = 1 if better.get(n, "lower") == "higher" else -1
+
+        def row(name, pv, cv, sign):
             wins = sum(sign * (c - q) > 0 for q, c in zip(pv, cv))
             pq, cq = quartiles(pv), quartiles(cv)
             ratio = cq[1] / pq[1] if pq[1] else float("nan")
-            log(f"# {n:36} {pq[1]:>12.5g} [{pq[0]:.5g}, {pq[2]:.5g}] "
+            log(f"# {name:36} {pq[1]:>12.5g} [{pq[0]:.5g}, {pq[2]:.5g}] "
                 f"{cq[1]:>12.5g} [{cq[0]:.5g}, {cq[2]:.5g}] {ratio:>7.3f} "
                 f"{wins}/{a.pairs}")
+
+        every = runs["parent"] + runs["change"]
+        for n in [n for n in runs["parent"][0]["metrics"]
+                  if all(n in r["metrics"] for r in every)]:
+            row(n, [r["metrics"][n]["value"] for r in runs["parent"]],
+                [r["metrics"][n]["value"] for r in runs["change"]],
+                1 if better.get(n, "lower") == "higher" else -1)
+        for n in [n for n in runs["parent"][0]["calls"]
+                  if all(n in r["calls"] for r in every)]:
+            row(f"call {n} median_s", [r["calls"][n] for r in runs["parent"]],
+                [r["calls"][n] for r in runs["change"]], -1)
+        for when in ("before", "after"):
+            for k in CANARY_KEYS:
+                row(f"canary {when} {k}",
+                    [r["canary"][when][k] for r in runs["parent"]],
+                    [r["canary"][when][k] for r in runs["change"]], 1)
         print(json.dumps({"workload": a.workload, "parent": a.parent,
                           "change": a.change, "runs": runs}))
     finally:

@@ -48,6 +48,15 @@ import org.apache.spark.sql.types._
   *     the atomic swap, so pinned readers and crash replay need no
   *     operational contract at all.
   *
+  * One question sits under every generational operation — which files,
+  * under which schema, make up generation g — and one private
+  * `Snapshot` answers it from ONE driver-local read of the manifest:
+  * reads, time travel, skipping reads, merge, delete and the pack all
+  * start from it. Every data read goes through `readParquet` under the
+  * manifest's `schema_json`, so none pays a schema-inference job, and
+  * the log itself has one driver-local reader and one writer, which
+  * [[checkpointManifest]] shares with the append.
+  *
   * Scale notes: the file inventory is driver-side METADATA (one
   * recursive listing — at warehouse scale the table format's manifest
   * serves it without touching the FS); the rewrite itself is
@@ -105,11 +114,8 @@ object Maintenance {
     * design, so reading it must never launch a cluster job: every
     * internal consumer goes through [[manifestEntries]], which reads
     * the parquet log directly on the driver (the Delta/Iceberg shape —
-    * their log readers are driver-local too). Before this, each
-    * `currentGen`/`resolveData`/`statsFor` call planned and ran a full
-    * Spark job over a few-KB file; a single COW merge paid ~8 of them,
-    * pure fixed overhead at any scale (guide §1.2: remove work that
-    * isn't the computation). */
+    * their log readers are driver-local too), and every generational
+    * operation reads it ONCE, through a [[Snapshot]]. */
   private final case class ManifestEntry(
       gen: Int, action: String, dataGen: Int, nRows: Long,
       renames: String, schemaJson: String, files: String)
@@ -128,9 +134,8 @@ object Maintenance {
 
   /** The full commit log, oldest first, read ON THE DRIVER (no Spark
     * job): O(files) KB-sized parquet reads via parquet-hadoop, exactly
-    * how the footer-stats harvest already reads footers. Reads both
-    * Spark-written files (the checkpointed log) and the driver-written
-    * appends — one physical schema either way. */
+    * how the footer-stats harvest already reads footers. The log's one
+    * reader, over the files of its one writer, [[writeManifest]]. */
   private def manifestEntries(
       spark: SparkSession, root: String): Seq[ManifestEntry] = {
     import org.apache.parquet.hadoop.ParquetReader
@@ -159,9 +164,9 @@ object Maintenance {
     out.result().sortBy(_.gen)
   }
 
-  /** The manifest's physical parquet schema — byte-compatible with
-    * what Spark writes for [[manifestSchema]], so driver-written
-    * appends and Spark-written checkpoints interleave freely. */
+  /** The manifest's physical parquet schema — the one Spark writes for
+    * [[manifestSchema]], so a plain Spark scan of `_manifest` reads the
+    * log too. */
   private lazy val manifestMessageType =
     org.apache.parquet.schema.MessageTypeParser.parseMessageType(
       """message spark_schema {
@@ -203,61 +208,67 @@ object Maintenance {
     * entirely while bounding any long-running loop. */
   private val ManifestCheckpointEvery = 64
 
-  /** Append one commit row as one tiny parquet file, written DIRECTLY
-    * on the driver (parquet-hadoop), not as a Spark job: a manifest
-    * append is O(metadata) by contract, and the old
-    * `createDataFrame(..).coalesce(1).write` spent a full job
-    * (plan + task + committer round trip) per commit to land ~200
-    * bytes. The file name embeds gen + a uuid so appends never
-    * collide; readers (Spark and [[manifestEntries]]) just see one
-    * more file of the same schema. */
-  private def appendManifest(
-      spark: SparkSession, root: String, row: Row): Unit = {
+  /** Write `entries` as one new parquet file, DIRECTLY on the driver
+    * (parquet-hadoop), not as a Spark job: the log is O(metadata) by
+    * contract, and a `createDataFrame(..).coalesce(1).write` spends a
+    * full job (plan + task + committer round trip) to land ~200 bytes
+    * per row. The log's one writer: appends and checkpoints alike. */
+  private def writeManifest(
+      spark: SparkSession, file: Path, entries: Seq[ManifestEntry]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.util.HadoopOutputFile
-    val fs = hadoopFs(spark, root)
-    val dir = new Path(manifestDir(root))
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val file = new Path(dir, f"append-${row.getInt(0)}%08d-$tag.parquet")
-    val conf = spark.sparkContext.hadoopConfiguration
     val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
+      .builder(HadoopOutputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
       .withType(manifestMessageType)
       .build()
-    try {
-      val grp = new SimpleGroupFactory(manifestMessageType).newGroup()
-      grp.append("gen", row.getInt(0))
-      grp.append("action", row.getString(1))
-      grp.append("data_gen", row.getInt(2))
-      grp.append("n_rows", row.getLong(3))
-      if (!row.isNullAt(4)) grp.append("renames", row.getString(4))
-      if (!row.isNullAt(5)) grp.append("schema_json", row.getString(5))
-      if (!row.isNullAt(6)) grp.append("files", row.getString(6))
+    val groups = new SimpleGroupFactory(manifestMessageType)
+    try entries.foreach { e =>
+      val grp = groups.newGroup()
+      grp.append("gen", e.gen)
+      grp.append("action", e.action)
+      grp.append("data_gen", e.dataGen)
+      grp.append("n_rows", e.nRows)
+      Seq("renames" -> e.renames, "schema_json" -> e.schemaJson,
+        "files" -> e.files).foreach { case (f, v) =>
+        if (v != null) grp.append(f, v)
+      }
       writer.write(grp)
     } finally writer.close()
-    if (manifestFiles(fs, root).size >= ManifestCheckpointEvery)
+  }
+
+  /** Append one commit row as one tiny parquet file. The file name
+    * embeds gen + a uuid so appends never collide; readers (Spark and
+    * [[manifestEntries]]) just see one more file of the same schema. */
+  private def appendManifest(
+      spark: SparkSession, root: String, e: ManifestEntry): Unit = {
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    writeManifest(spark,
+      new Path(manifestDir(root), f"append-${e.gen}%08d-$tag.parquet"), Seq(e))
+    if (manifestFiles(hadoopFs(spark, root), root).size >= ManifestCheckpointEvery)
       checkpointManifest(spark, root)
   }
 
   /** Fold the commit log into ONE parquet file, preserving every row —
     * history compaction for the log itself, auto-invoked by the
     * appender past [[ManifestCheckpointEvery]] files and callable
-    * directly. The swap (write compacted → delete old dir → rename in)
-    * rides the table's documented SINGLE-WRITER contract: the writer
-    * that appends is the writer that checkpoints, and in-process
-    * readers serialize through the driver between operations; a
-    * production deployment makes the flip catalog-atomic exactly like
-    * the commit append itself. */
+    * directly. Driver-local like the append: the rows already read
+    * are written through [[writeManifest]], no Spark job. The swap
+    * (write compacted → delete old dir → rename in, the rename
+    * verified) rides the table's documented SINGLE-WRITER contract:
+    * the writer that appends is the writer that checkpoints, and
+    * in-process readers serialize through the driver between
+    * operations; a production deployment makes the flip
+    * catalog-atomic exactly like the commit append itself. */
   def checkpointManifest(spark: SparkSession, root: String): Unit = {
     val fs = hadoopFs(spark, root)
     val dir = new Path(manifestDir(root))
     if (!fs.exists(dir)) return
     val tmp = new Path(s"$root/_manifest_ckpt")
     fs.delete(tmp, true)
-    spark.read.parquet(dir.toString).orderBy("gen")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    writeManifest(spark, new Path(tmp, "checkpoint.parquet"),
+      manifestEntries(spark, root))
     fs.delete(dir, true)
     require(fs.rename(tmp, dir),
       s"manifest checkpoint rename failed for $root; the compacted " +
@@ -279,10 +290,8 @@ object Maintenance {
   /** Next free manifest id — ONE sequence across commits, rollbacks
     * and stages, so a staged-but-unpublished candidate can never
     * collide with a later commit's generation id. */
-  private def nextId(spark: SparkSession, root: String): Int = {
-    val es = manifestEntries(spark, root)
-    (if (es.isEmpty) 0 else es.map(_.gen).max) + 1
-  }
+  private def nextId(entries: Seq[ManifestEntry]): Int =
+    (if (entries.isEmpty) 0 else entries.map(_.gen).max) + 1
 
   /** Latest generation carrying data (commit or rollback), or 0 on a
     * fresh root. Driver-side: the manifest is KB-sized by design. */
@@ -290,6 +299,106 @@ object Maintenance {
     val gens = manifestEntries(spark, root)
       .filter(e => e.action == "commit" || e.action == "rollback")
     if (gens.isEmpty) 0 else gens.map(_.gen).max
+  }
+
+  /** Generation `at` (the current one when None) as ONE read of the
+    * commit log resolves it — which files, under which schema, make up
+    * the generation. Every generational read, skip, merge, delete and
+    * pack starts from one of these. It holds the log itself (for
+    * [[nextId]] and [[reconcile]]), `dataGen` (the directory holding
+    * the rows, through a rollback's pointer), the holding commit's file
+    * list when that commit is file-granular, the holder's
+    * `schema_json` (the physical schema of those files) and the head
+    * commit's (the table's current schema). The directory listing and
+    * the stats sidecar are read on first use. */
+  private final class Snapshot(
+      spark: SparkSession, val root: String, at: Option[Int]) {
+    val entries: Seq[ManifestEntry] = manifestEntries(spark, root)
+    private val data =
+      entries.filter(e => e.action == "commit" || e.action == "rollback")
+    val gen: Int = at.getOrElse(if (data.isEmpty) 0 else data.map(_.gen).max)
+    private val row = data.find(_.gen == gen)
+    require(row.nonEmpty, s"gen=$gen not in manifest")
+    val dataGen: Int = row.get.dataGen
+    val nRows: Long = row.get.nRows
+    // a rollback row carries no file list of its own — the commit that
+    // WROTE data_gen does (commit rows have gen == data_gen)
+    private val holder =
+      if (dataGen == gen) row else data.find(_.gen == dataGen)
+    /** The holder's file list; None = the generation is its directory. */
+    val listed: Option[Seq[String]] =
+      holder.map(h => decodeFiles(h.files)).filter(_.nonEmpty)
+    val schemaJson: String = holder.map(_.schemaJson).orNull
+    val headJson: String = entries.filter(_.action == "commit")
+      .lastOption.map(_.schemaJson).orNull
+    val fs: FileSystem = hadoopFs(spark, root)
+    def dir: String = genDir(root, dataGen)
+
+    /** The generation's data files: the holder's list, else a listing
+      * of its directory. */
+    lazy val statuses: Seq[FileStatus] = listed.fold(dataFiles(fs, dir))(
+      _.map(f => fs.getFileStatus(new Path(f))))
+    lazy val files: Seq[String] =
+      listed.getOrElse(statuses.map(_.getPath.toString))
+
+    /** The files' schema as a read sees it, from `schema_json` (no
+      * footer read; inferred only for rows that predate the column). */
+    def schema: StructType = readParquet(spark, schemaJson, files.take(1)).schema
+
+    /** The stats sidecar of the holding generation, if one was written
+      * ([[commitWithStats]] / [[merge]]). Driver-local read — the
+      * sidecar is O(files×columns) metadata, consulted on every
+      * skipping read and COW probe. */
+    lazy val stats: Option[Seq[TableStats.ColStats]] = {
+      val d = statsDir(root, dataGen)
+      if (!fs.exists(new Path(d))) None
+      else Some(TableStats.readSidecarLocal(
+        spark.sparkContext.hadoopConfiguration, d))
+    }
+    def requiredStats(op: String): Seq[TableStats.ColStats] =
+      stats.getOrElse(throw new IllegalArgumentException(
+        s"$op requires a stats sidecar — commit with commitWithStats(...)"))
+
+    def nextId: Int = Maintenance.nextId(entries)
+
+    /** Forward-reconcile `raw`, read at `dataGen`, to the head commit's
+      * schema (see [[readGen]]). */
+    def reconcile(raw: DataFrame): DataFrame = {
+      var out = raw
+      entries.filter(c => c.action == "commit" && c.gen > dataGen).foreach { c =>
+        decodeRenames(c.renames).foreach { case (nw, old) =>
+          if (out.columns.contains(old))
+            out = out.withColumnRenamed(old, nw)
+        }
+      }
+      if (headJson == null) out // legacy rows without schema
+      else {
+        val target = structOf(headJson)
+        if (out.schema.fieldNames.toSeq == target.fieldNames.toSeq) out
+        else out.select(target.fields.map { f =>
+          if (out.columns.contains(f.name)) col(f.name)
+          else lit(null).cast(f.dataType).as(f.name)
+        }.toIndexedSeq: _*)
+      }
+    }
+  }
+
+  private def structOf(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  /** Parquet `paths` read under `schemaJson`, so no Spark job infers a
+    * schema (rows that predate the column, null here, still infer).
+    * Every read of a generational table's data goes through here.
+    * Spark lists more root paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a
+    * listing job; longer lists are read in chunks of that size and
+    * unioned, each chunk listed without a job. */
+  private def readParquet(
+      spark: SparkSession, schemaJson: String, paths: Seq[String]): DataFrame = {
+    val reader = Option(schemaJson).fold(spark.read)(j =>
+      spark.read.schema(structOf(j)))
+    val chunk = math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+    paths.grouped(chunk).map(reader.parquet(_: _*)).reduce(_ union _)
   }
 
   /** Write `df` as the next immutable generation, then append the
@@ -305,13 +414,13 @@ object Maintenance {
   def commit(
       spark: SparkSession, root: String, df: DataFrame,
       renames: Map[String, String] = Map.empty): Int = {
-    val g = nextId(spark, root)
+    val g = nextId(manifestEntries(spark, root))
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(genDir(root, g))
     val n = obs.get("n").asInstanceOf[Long]
     appendManifest(spark, root,
-      Row(g, "commit", g, n, encodeRenames(renames), df.schema.json,
+      ManifestEntry(g, "commit", g, n, encodeRenames(renames), df.schema.json,
         null))
     g
   }
@@ -347,20 +456,26 @@ object Maintenance {
       stats: org.apache.spark.sql.Dataset[TableStats.ColStats]): Unit =
     stats.coalesce(1).write.mode("overwrite").parquet(statsDir(root, g))
 
+  /** The sidecar of a generation made from older files plus new ones:
+    * `kept` files' rows carried from `stats` (never re-read), `fresh`
+    * files footer-harvested. */
+  private def carrySidecar(
+      spark: SparkSession, root: String, g: Int,
+      stats: Seq[TableStats.ColStats], kept: Seq[String],
+      fresh: Seq[String]): Unit = {
+    import spark.implicits._
+    val keptSet = kept.toSet
+    writeSidecar(spark, root, g,
+      TableStats.harvest(spark, fresh, stats.map(_.column).distinct)
+        .unionByName(spark.createDataset(stats.filter(s => keptSet(s.file)))))
+  }
+
   /** The stats sidecar of the generation HOLDING `gen`'s rows, if one
-    * was written ([[commitWithStats]] / [[merge]]). Driver-local read
-    * — the sidecar is O(files×columns) metadata, consulted on every
-    * skipping read and COW probe; a cluster job per consult was pure
-    * fixed overhead. */
+    * was written ([[commitWithStats]] / [[merge]]). */
   def statsFor(
       spark: SparkSession, root: String,
-      gen: Int): Option[Seq[TableStats.ColStats]] = {
-    val (dataGen, _, _) = resolveData(spark, root, gen)
-    val d = statsDir(root, dataGen)
-    if (!hadoopFs(spark, root).exists(new Path(d))) None
-    else Some(TableStats.readSidecarLocal(
-      spark.sparkContext.hadoopConfiguration, d))
-  }
+      gen: Int): Option[Seq[TableStats.ColStats]] =
+    new Snapshot(spark, root, Some(gen)).stats
 
   /** Data-skipping read of the current generation: resolve the
     * inclusive range predicate `column BETWEEN lo AND hi` against the
@@ -374,25 +489,16 @@ object Maintenance {
   def prunedReadCurrent(
       spark: SparkSession, root: String, column: String,
       lo: Any, hi: Any): TableStats.PrunedRead = {
-    val g = currentGen(spark, root)
-    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
-    val fs = hadoopFs(spark, root)
-    val allFiles = filesOpt.getOrElse(
-      dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
-    val stats = statsFor(spark, root, g).getOrElse(Nil)
-    val (kept, skippedRows) =
-      TableStats.pruneFiles(stats, allFiles, column, lo, hi)
+    val snap = new Snapshot(spark, root, None)
+    val (kept, skippedRows) = TableStats.pruneFiles(
+      snap.stats.getOrElse(Nil), snap.files, column, lo, hi)
+    // everything pruned: an empty frame under the table schema
     val df =
-      if (kept.nonEmpty) spark.read.parquet(kept: _*)
-      else {
-        // everything pruned: an empty frame under the table schema
-        val schema = spark.read.parquet(allFiles.head).schema
-        spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), schema)
-      }
+      if (kept.nonEmpty) readParquet(spark, snap.schemaJson, kept)
+      else spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), snap.schema)
     TableStats.PrunedRead(
-      reconcileToCurrent(spark, root, df, dataGen),
-      allFiles.size, kept.size, skippedRows)
+      snap.reconcile(df), snap.files.size, kept.size, skippedRows)
   }
 
   /** The current generation as a PLANNER-SKIPPING scan: a
@@ -406,32 +512,22 @@ object Maintenance {
     * hand Spark the same seam). Returns the frame plus the index,
     * whose `lastDecision` records (total, kept) of the most recent
     * planning. Requires the holding generation to carry a stats
-    * sidecar and to be at the table's current physical schema. */
+    * sidecar and its `schema_json` to name the table's current
+    * columns. */
   def readCurrentSkipping(
       spark: SparkSession,
       root: String): (DataFrame, graft.plans.StatsPrunedFileIndex) = {
     import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val g = currentGen(spark, root)
-    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
-    val fs = hadoopFs(spark, root)
-    val files = filesOpt
-      .map(_.map(f => fs.getFileStatus(new Path(f))))
-      .getOrElse(dataFiles(fs, genDir(root, dataGen)))
-    val stats = statsFor(spark, root, g).getOrElse(
-      throw new IllegalArgumentException(
-        s"readCurrentSkipping requires a stats sidecar — commit with " +
-          "commitWithStats(...)"))
-    val dataSchema = spark.read
-      .parquet(files.head.getPath.toString).schema
-    val headJson = headCommitSchemaJson(spark, root)
-    require(headJson == null ||
-      DataType.fromJson(headJson).asInstanceOf[StructType]
-        .fieldNames.toSeq == dataSchema.fieldNames.toSeq,
+    val snap = new Snapshot(spark, root, None)
+    val stats = snap.requiredStats("readCurrentSkipping")
+    val dataSchema = snap.schema
+    require(snap.headJson == null ||
+      structOf(snap.headJson).fieldNames.toSeq == dataSchema.fieldNames.toSeq,
       "readCurrentSkipping requires the physical schema at the " +
         "table's current schema (no pending reconciliation); " +
         "commit(readCurrent(...)) to materialize first")
-    val index = new graft.plans.StatsPrunedFileIndex(files, stats)
+    val index = new graft.plans.StatsPrunedFileIndex(snap.statuses, stats)
     val rel = HadoopFsRelation(
       index, StructType(Nil), dataSchema, None,
       new ParquetFileFormat, Map.empty[String, String])(spark)
@@ -473,48 +569,25 @@ object Maintenance {
   def merge(
       spark: SparkSession, root: String, source: DataFrame,
       key: String): MergeStats = {
-    val g = currentGen(spark, root)
-    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
-    val fs = hadoopFs(spark, root)
-    val allFiles = filesOpt.getOrElse(
-      dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
-    val stats = statsFor(spark, root, g).getOrElse(
-      throw new IllegalArgumentException(
-        s"merge requires a stats sidecar on '$key' — commit with " +
-          s"commitWithStats(..., statsColumns = Seq(\"$key\"))"))
-    val headJson = headCommitSchemaJson(spark, root)
+    val snap = new Snapshot(spark, root, None)
+    val stats = snap.requiredStats(s"merge on '$key'")
     def shapeOf(s: StructType) =
       s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(headJson != null &&
-      shapeOf(DataType.fromJson(headJson).asInstanceOf[StructType]) ==
-        shapeOf(source.schema),
+    require(snap.headJson != null &&
+      shapeOf(structOf(snap.headJson)) == shapeOf(source.schema),
       s"merge source schema must equal the table schema; table=" +
-        s"$headJson source=${source.schema.json}")
-
-    val keyStats = stats.filter(s =>
-      s.column == key && s.has_minmax).groupBy(_.file)
-    val (prunable, unprunable) =
-      allFiles.partition(keyStats.contains)
-    // per-file key ranges -> which files can a source key land in?
-    // Resolved WITHOUT a join by [[TableStats.touchedFiles]]: the
-    // ranges decompose into elementary segments (driver sweep), one
-    // broadcast binary search assigns each source key its segment,
-    // and a distinct over the tiny segment-id space yields the hit
-    // set — O(|source| log F), never |source| x |files|.
-    import spark.implicits._
-    val touched = TableStats.touchedFiles(
-      spark, source, key, prunable.map(keyStats(_).head))
-    val rewrite = (unprunable ++ prunable.filter(touched)).sorted
-    val untouched = allFiles.filterNot(rewrite.toSet).sorted
-
+        s"${snap.headJson} source=${source.schema.json}")
+    val rewrite = touchedFiles(spark, snap, stats, source, key)
+    val untouched = snap.files.filterNot(rewrite.toSet).sorted
     val survivors =
       if (rewrite.isEmpty) source
-      else spark.read.parquet(rewrite: _*)
+      else readParquet(spark, snap.schemaJson, rewrite)
         .join(source.select(col(key)), Seq(key), "left_anti")
         .unionByName(source)
-    val (newGen, written) = commitCow(spark, root, rewrite, untouched,
-      survivors, key, headJson, stats)
-    MergeStats(newGen, allFiles.size, rewrite.size, untouched.size,
+    val (newGen, written, newFiles) =
+      writeCow(spark, snap, rewrite.size, survivors, key)
+    finalizeCow(spark, snap, newGen, newFiles, untouched, written, stats)
+    MergeStats(newGen, snap.files.size, rewrite.size, untouched.size,
       written)
   }
 
@@ -547,34 +620,19 @@ object Maintenance {
   def delete(
       spark: SparkSession, root: String, keys: DataFrame,
       key: String): DeleteStats = {
-    val g = currentGen(spark, root)
-    val (dataGen, filesOpt, _) = resolveData(spark, root, g)
-    val fs = hadoopFs(spark, root)
-    val allFiles = filesOpt.getOrElse(
-      dataFiles(fs, genDir(root, dataGen)).map(_.getPath.toString))
-    val stats = statsFor(spark, root, g).getOrElse(
-      throw new IllegalArgumentException(
-        s"delete requires a stats sidecar on '$key' — commit with " +
-          s"commitWithStats(..., statsColumns = Seq(\"$key\"))"))
-    val headJson = headCommitSchemaJson(spark, root)
+    val snap = new Snapshot(spark, root, None)
+    val stats = snap.requiredStats(s"delete on '$key'")
     val keySet = keys.select(col(key))
-    val keyStats = stats.filter(s =>
-      s.column == key && s.has_minmax).groupBy(_.file)
-    val (prunable, unprunable) =
-      allFiles.partition(keyStats.contains)
-    val touched = TableStats.touchedFiles(
-      spark, keySet, key, prunable.map(keyStats(_).head))
-    val rewrite = (unprunable ++ prunable.filter(touched)).sorted
-    if (rewrite.isEmpty)
-      return DeleteStats(g, allFiles.size, 0, allFiles.size, 0L)
-    val untouched = allFiles.filterNot(rewrite.toSet).sorted
-    val survivors = spark.read.parquet(rewrite: _*)
+    val rewrite = touchedFiles(spark, snap, stats, keySet, key)
+    val unchanged =
+      DeleteStats(snap.gen, snap.files.size, 0, snap.files.size, 0L)
+    if (rewrite.isEmpty) return unchanged
+    val untouched = snap.files.filterNot(rewrite.toSet).sorted
+    val survivors = readParquet(spark, snap.schemaJson, rewrite)
       .join(keySet, Seq(key), "left_anti")
     val (newGen, written, newFiles) =
-      writeCow(spark, root, rewrite.size, survivors, key)
-    val perFileRows = stats.groupBy(_.file)
-      .map { case (f, ss) => (f, ss.head.n_rows) }
-    val rewriteRows = rewrite.map(f => perFileRows.getOrElse(f, 0L)).sum
+      writeCow(spark, snap, rewrite.size, survivors, key)
+    val rewriteRows = rowsIn(stats, rewrite)
     if (written == rewriteRows) {
       // the stats prune is a SUPERSET (a file's range can contain a
       // doomed key that is not actually present); when the rewrite
@@ -582,43 +640,52 @@ object Maintenance {
       // is reclaimed, no manifest row lands, and the purge stays a
       // fixpoint (Delta's empty-DELETE elision). The probe cost was
       // paid; generation churn was not.
-      fs.delete(new Path(genDir(root, newGen)), true)
-      return DeleteStats(g, allFiles.size, 0, allFiles.size, 0L)
+      snap.fs.delete(new Path(genDir(root, newGen)), true)
+      return unchanged
     }
-    finalizeCow(spark, root, newGen, newFiles, untouched, written,
-      headJson, stats)
-    DeleteStats(newGen, allFiles.size, rewrite.size, untouched.size,
+    finalizeCow(spark, snap, newGen, newFiles, untouched, written, stats)
+    DeleteStats(newGen, snap.files.size, rewrite.size, untouched.size,
       rewriteRows - written)
   }
 
-  /** Shared copy-on-write tail: land `survivors` re-clustered by
-    * `key` as the new generation's own files, carry the untouched
-    * files' sidecar rows + row counts from METADATA (never re-read),
-    * harvest the new files' footers, and append the file-granular
-    * commit. Returns (new generation, rows written). */
-  private def commitCow(
-      spark: SparkSession, root: String, rewrite: Seq[String],
-      untouched: Seq[String], survivors: DataFrame, key: String,
-      headJson: String,
-      stats: Seq[TableStats.ColStats]): (Int, Long) = {
-    val (newGen, written, newFiles) =
-      writeCow(spark, root, rewrite.size, survivors, key)
-    finalizeCow(spark, root, newGen, newFiles, untouched, written,
-      headJson, stats)
-    (newGen, written)
+  /** The COW probe: the snapshot's files a `key` of `probe` can land
+    * in, sorted — files without usable key stats, plus every file
+    * whose sidecar [min,max] admits a probe key. Resolved WITHOUT a
+    * join by [[TableStats.touchedFiles]]: the ranges decompose into
+    * elementary segments (driver sweep), one broadcast binary search
+    * assigns each probe key its segment, and a distinct over the tiny
+    * segment-id space yields the hit set — O(|probe| log F), never
+    * |probe| x |files|. */
+  private def touchedFiles(
+      spark: SparkSession, snap: Snapshot, stats: Seq[TableStats.ColStats],
+      probe: DataFrame, key: String): Seq[String] = {
+    val keyStats = stats.filter(s =>
+      s.column == key && s.has_minmax).groupBy(_.file)
+    val (prunable, unprunable) = snap.files.partition(keyStats.contains)
+    val touched = TableStats.touchedFiles(
+      spark, probe, key, prunable.map(keyStats(_).head))
+    (unprunable ++ prunable.filter(touched)).sorted
   }
 
-  /** COW write half: land `survivors` into the candidate generation's
-    * directory. No manifest row yet — the caller may still ELIDE the
-    * commit (empty delete), in which case the directory is simply
-    * reclaimed and the unreferenced id is reused by the next commit. */
+  /** Rows in `files`, from the sidecar's per-file `n_rows`. */
+  private def rowsIn(
+      stats: Seq[TableStats.ColStats], files: Seq[String]): Long = {
+    val perFile = stats.groupBy(_.file).map { case (f, ss) => (f, ss.head.n_rows) }
+    files.map(perFile.getOrElse(_, 0L)).sum
+  }
+
+  /** COW write half: land `survivors` re-clustered by `key` into the
+    * candidate generation's directory. No manifest row yet — the
+    * caller may still ELIDE the commit (empty delete), in which case
+    * the directory is simply reclaimed and the unreferenced id is
+    * reused by the next commit. Returns (candidate generation, rows
+    * written, its files). */
   private def writeCow(
-      spark: SparkSession, root: String, nRewrite: Int,
+      spark: SparkSession, snap: Snapshot, nRewrite: Int,
       survivors: DataFrame, key: String): (Int, Long, Seq[String]) = {
-    val fs = hadoopFs(spark, root)
-    val newGen = nextId(spark, root)
-    val outDir = genDir(root, newGen)
-    fs.delete(new Path(outDir), true)
+    val newGen = snap.nextId
+    val outDir = genDir(snap.root, newGen)
+    snap.fs.delete(new Path(outDir), true)
     val nOut = math.max(1, nRewrite)
     val obs = Observation()
     survivors
@@ -628,29 +695,21 @@ object Maintenance {
       .write.mode("overwrite").parquet(outDir)
     val written = obs.get("n").asInstanceOf[Long]
     (newGen, written,
-      dataFiles(fs, outDir).map(_.getPath.toString).sorted)
+      dataFiles(snap.fs, outDir).map(_.getPath.toString).sorted)
   }
 
-  /** COW finalize half: sidecar carry-over + the file-granular
-    * manifest append (the visibility flip). */
+  /** COW finalize half: the untouched files' sidecar rows and row
+    * counts carried from METADATA (never re-read), the new files'
+    * footers harvested, and the file-granular manifest append (the
+    * visibility flip). */
   private def finalizeCow(
-      spark: SparkSession, root: String, newGen: Int,
+      spark: SparkSession, snap: Snapshot, newGen: Int,
       newFiles: Seq[String], untouched: Seq[String], written: Long,
-      headJson: String, stats: Seq[TableStats.ColStats]): Unit = {
-    import spark.implicits._
-    // carried rows counted from METADATA (sidecar n_rows per file) —
-    // the untouched bytes are never re-read, which is the point
-    val perFileRows = stats.groupBy(_.file)
-      .map { case (f, ss) => (f, ss.head.n_rows) }
-    val carried = untouched.map(f => perFileRows.getOrElse(f, 0L)).sum
-    val statCols = stats.map(_.column).distinct
-    val carriedStats = stats.filter(s => untouched.contains(s.file))
-    val newStats = TableStats.harvest(spark, newFiles, statCols)
-    writeSidecar(spark, root, newGen,
-      newStats.unionByName(spark.createDataset(carriedStats)))
-    appendManifest(spark, root,
-      Row(newGen, "commit", newGen, carried + written, null, headJson,
-        encodeFiles(untouched ++ newFiles)))
+      stats: Seq[TableStats.ColStats]): Unit = {
+    carrySidecar(spark, snap.root, newGen, stats, untouched, newFiles)
+    appendManifest(spark, snap.root,
+      ManifestEntry(newGen, "commit", newGen, rowsIn(stats, untouched) + written,
+        null, snap.headJson, encodeFiles(untouched ++ newFiles)))
   }
 
   // ---------------------------------------------------------------
@@ -672,24 +731,24 @@ object Maintenance {
     * (same zero-re-read contract as [[commit]]). */
   def stageCommit(
       spark: SparkSession, root: String, df: DataFrame): Int = {
-    val id = nextId(spark, root)
+    val id = nextId(manifestEntries(spark, root))
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(stageDir(root, id))
     val n = obs.get("n").asInstanceOf[Long]
     appendManifest(spark, root,
-      Row(id, "stage", id, n, null, df.schema.json, null))
+      ManifestEntry(id, "stage", id, n, null, df.schema.json, null))
     id
   }
 
   private def stageDir(root: String, id: Int) = f"$root/_stage_$id%08d"
 
-  /** The staged candidate, for the AUDIT job — reads the landed bytes.
-    * Throws if the stage was already published or aborted. */
-  def readStage(spark: SparkSession, root: String, stageId: Int): DataFrame = {
-    requireLiveStage(spark, root, stageId)
-    spark.read.parquet(stageDir(root, stageId))
-  }
+  /** The staged candidate, for the AUDIT job — reads the landed bytes
+    * under the stage row's `schema_json`. Throws if the stage was
+    * already published or aborted. */
+  def readStage(spark: SparkSession, root: String, stageId: Int): DataFrame =
+    readParquet(spark, requireLiveStage(spark, root, stageId).schemaJson,
+      Seq(stageDir(root, stageId)))
 
   /** Promote an audited stage to the table's next generation: ONE
     * verified rename (the staged bytes are never rewritten) plus the
@@ -697,14 +756,14 @@ object Maintenance {
     * size, which is the point: the expensive write happened at stage
     * time, before anything was visible. Returns the new generation. */
   def publish(spark: SparkSession, root: String, stageId: Int): Int = {
-    val row = requireLiveStage(spark, root, stageId)
-    val g = nextId(spark, root)
+    val st = requireLiveStage(spark, root, stageId)
+    val g = nextId(manifestEntries(spark, root))
     val fs = hadoopFs(spark, root)
     require(fs.rename(
       new Path(stageDir(root, stageId)), new Path(genDir(root, g))),
       s"publish rename failed for stage $stageId; stage left intact")
     appendManifest(spark, root,
-      Row(g, "commit", g, row.getLong(0), null, row.getString(1), null))
+      ManifestEntry(g, "commit", g, st.nRows, null, st.schemaJson, null))
     g
   }
 
@@ -714,13 +773,14 @@ object Maintenance {
   def abortStage(spark: SparkSession, root: String, stageId: Int): Unit = {
     requireLiveStage(spark, root, stageId)
     hadoopFs(spark, root).delete(new Path(stageDir(root, stageId)), true)
-    appendManifest(spark, root, Row(stageId, "abort", -1, 0L, null, null, null))
+    appendManifest(spark, root,
+      ManifestEntry(stageId, "abort", -1, 0L, null, null, null))
   }
 
   /** The stage row if `stageId` is live (staged, not yet published /
-    * aborted); loud error otherwise. Returns (n_rows, schema_json). */
+    * aborted); loud error otherwise. */
   private def requireLiveStage(
-      spark: SparkSession, root: String, stageId: Int): Row = {
+      spark: SparkSession, root: String, stageId: Int): ManifestEntry = {
     val rows = manifestEntries(spark, root)
       .filter(e => e.gen == stageId &&
         Set("stage", "abort", "commit")(e.action))
@@ -731,8 +791,7 @@ object Maintenance {
     require(hadoopFs(spark, root)
       .exists(new Path(stageDir(root, stageId))),
       s"stage $stageId was already published (or its directory is gone)")
-    val r = rows.find(_.action == "stage").get
-    Row(r.nRows, r.schemaJson)
+    rows.find(_.action == "stage").get
   }
 
   /** Restore the table to `toGen` WITHOUT copying data: the new commit
@@ -743,118 +802,56 @@ object Maintenance {
     * restores ROWS, and [[readGen]] presents them under the current
     * schema like any other old snapshot. */
   def rollback(spark: SparkSession, root: String, toGen: Int): Int = {
-    val m = manifestEntries(spark, root)
-      .filter(e => e.gen == toGen &&
-        (e.action == "commit" || e.action == "rollback"))
+    val entries = manifestEntries(spark, root)
+    val m = entries.filter(e => e.gen == toGen &&
+      (e.action == "commit" || e.action == "rollback"))
     require(m.nonEmpty, s"rollback target gen=$toGen not in manifest")
-    val g = nextId(spark, root)
+    val g = nextId(entries)
     appendManifest(spark, root,
-      Row(g, "rollback", m.head.dataGen, m.head.nRows, null, null,
+      ManifestEntry(g, "rollback", m.head.dataGen, m.head.nRows, null, null,
         null))
     g
   }
 
-  /** Resolve a generation to the directory that holds its rows
-    * (following a rollback's pointer), read it, and RECONCILE it to
-    * the table's current schema: renames recorded by later commits
-    * apply forward, columns the schema gained later surface as typed
-    * nulls, and columns it dropped are omitted — so every reader, live
-    * or time-traveling, sees ONE schema (the latest commit's,
-    * resolved from the manifest without touching any data directory).
-    * When the snapshot already matches the current schema the frame is
-    * returned as-is — zero plan overhead on the no-evolution path.
-    * Throws with the generation named if it was vacuumed — a pinned
-    * reader must fail loudly, not silently read an empty dir. */
-  def readGen(spark: SparkSession, root: String, gen: Int): DataFrame = {
-    val (dataGen, files, schemaJson) = resolveData(spark, root, gen)
-    val fs = hadoopFs(spark, root)
-    val paths = files match {
+  /** Resolve a generation to the files that hold its rows (following
+    * a rollback's pointer), read them under the holding commit's
+    * `schema_json`, and RECONCILE them to the table's current schema:
+    * renames recorded by later commits apply forward, columns the
+    * schema gained later surface as typed nulls, and columns it
+    * dropped are omitted — so every reader, live or time-traveling,
+    * sees ONE schema (the latest commit's, resolved from the manifest
+    * without touching any data directory). When the snapshot already
+    * matches the current schema the frame is returned as-is — zero
+    * plan overhead on the no-evolution path. Throws with the
+    * generation named if it was vacuumed — a pinned reader must fail
+    * loudly, not silently read an empty dir. */
+  def readGen(spark: SparkSession, root: String, gen: Int): DataFrame =
+    read(spark, new Snapshot(spark, root, Some(gen)))
+
+  /** Current table state = [[readGen]] of [[currentGen]]. */
+  def readCurrent(spark: SparkSession, root: String): DataFrame =
+    read(spark, new Snapshot(spark, root, None))
+
+  private def read(spark: SparkSession, snap: Snapshot): DataFrame = {
+    val paths = snap.listed match {
       case Some(fl) =>
         // file-granular generation: its rows may live across several
         // older directories; vacuum reclaims whole dirs, so checking
         // the distinct PARENTS is the exact liveness test
         fl.map(f => new Path(f).getParent).distinct.foreach { d =>
-          require(fs.exists(d),
-            s"gen=$gen references files under vacuumed directory $d")
+          require(snap.fs.exists(d),
+            s"gen=${snap.gen} references files under vacuumed directory $d")
         }
         fl
       case None =>
-        val dir = genDir(root, dataGen)
-        require(fs.exists(new Path(dir)),
-          s"gen=$gen (data_gen=$dataGen) was vacuumed; oldest retained " +
-            s"generation is recorded in the manifest's vacuum rows")
-        Seq(dir)
+        require(snap.fs.exists(new Path(snap.dir)),
+          s"gen=${snap.gen} (data_gen=${snap.dataGen}) was vacuumed; " +
+            "oldest retained generation is recorded in the manifest's " +
+            "vacuum rows")
+        Seq(snap.dir)
     }
-    reconcileToCurrent(spark, root, readParquet(spark, schemaJson, paths), dataGen)
+    snap.reconcile(readParquet(spark, snap.schemaJson, paths))
   }
-
-  /** Resolve `gen` through any rollback pointer to (data_gen, file
-    * list if the holding commit is file-granular, the holding commit's
-    * schema_json — the physical schema of those files). */
-  private def resolveData(
-      spark: SparkSession, root: String,
-      gen: Int): (Int, Option[Seq[String]], String) = {
-    val rows = manifestEntries(spark, root)
-      .filter(e => e.action == "commit" || e.action == "rollback")
-    val m = rows.find(_.gen == gen)
-    require(m.nonEmpty, s"gen=$gen not in manifest")
-    val dataGen = m.get.dataGen
-    // a rollback row carries no file list of its own — the commit that
-    // WROTE data_gen does (commit rows have gen == data_gen)
-    val holder = if (dataGen == gen) m else rows.find(_.gen == dataGen)
-    val files = holder.flatMap(h => Option(h.files)).map(decodeFiles)
-    (dataGen, files.filter(_.nonEmpty), holder.map(_.schemaJson).orNull)
-  }
-
-  /** Parquet `paths` read under `schemaJson`, so no Spark job infers a
-    * schema (rows that predate the column, null here, still infer).
-    * Spark lists more root paths than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` with a
-    * listing job; longer lists are read in chunks of that size and
-    * unioned, each chunk listed without a job. */
-  private def readParquet(
-      spark: SparkSession, schemaJson: String, paths: Seq[String]): DataFrame = {
-    val reader = Option(schemaJson).fold(spark.read)(j =>
-      spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType]))
-    val chunk = math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
-    paths.grouped(chunk).map(reader.parquet(_: _*)).reduce(_ union _)
-  }
-
-  /** Forward-reconcile a snapshot written at `dataGen` to the latest
-    * commit's schema. Driver-side over the KB-sized manifest. */
-  private def reconcileToCurrent(
-      spark: SparkSession, root: String,
-      raw: DataFrame, dataGen: Int): DataFrame = {
-    val commits = manifestEntries(spark, root)
-      .filter(_.action == "commit").sortBy(_.gen)
-    if (commits.isEmpty) return raw
-    var out = raw
-    commits.filter(_.gen > dataGen).foreach { c =>
-      decodeRenames(c.renames).foreach { case (nw, old) =>
-        if (out.columns.contains(old))
-          out = out.withColumnRenamed(old, nw)
-      }
-    }
-    val headJson = commits.last.schemaJson
-    if (headJson == null) return out // legacy rows without schema
-    val target = DataType.fromJson(headJson).asInstanceOf[StructType]
-    if (out.schema.fieldNames.toSeq == target.fieldNames.toSeq) out
-    else out.select(target.fields.map { f =>
-      if (out.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-  }
-
-  /** The latest commit's schema_json — the table's CURRENT schema. */
-  private def headCommitSchemaJson(
-      spark: SparkSession, root: String): String = {
-    val commits = manifestEntries(spark, root).filter(_.action == "commit")
-    if (commits.isEmpty) null else commits.maxBy(_.gen).schemaJson
-  }
-
-  /** Current table state = [[readGen]] of [[currentGen]]. */
-  def readCurrent(spark: SparkSession, root: String): DataFrame =
-    readGen(spark, root, currentGen(spark, root))
 
   /** Reclaim generation directories not reachable from the last
     * `keepLast` commits — "reachable" RESOLVES rollback pointers (a
@@ -889,7 +886,8 @@ object Maintenance {
     reclaimable.foreach(fs.delete(_, true))
     reclaimed.foreach { g =>
       fs.delete(new Path(statsDir(root, g)), true)
-      appendManifest(spark, root, Row(g, "vacuum", -1, 0L, null, null, null))
+      appendManifest(spark, root,
+        ManifestEntry(g, "vacuum", -1, 0L, null, null, null))
     }
     reclaimed.toSeq
   }
@@ -1134,39 +1132,27 @@ object Maintenance {
       spark: SparkSession, root: String,
       targetBytes: Long, minFileBytes: Long): (Int, CompactStats) = {
     requireConvergent(targetBytes, minFileBytes)
-    val entries = manifestEntries(spark, root)
-    val dataRows = entries
-      .filter(e => e.action == "commit" || e.action == "rollback")
-    require(dataRows.nonEmpty, s"no current generation under $root")
-    val g = dataRows.map(_.gen).max
-    val src = dataRows.find(_.gen == g).get
-    val dataGen = src.dataGen
-    val nRows = src.nRows
-    val fs = hadoopFs(spark, root)
-    val (_, files, schemaJson) = resolveData(spark, root, g)
-    val all = files match {
-      case Some(fl) => fl.map(f => fs.getFileStatus(new Path(f)))
-      case None     => dataFiles(fs, genDir(root, dataGen))
-    }
+    val snap = new Snapshot(spark, root, None)
+    val all = snap.statuses
     val small = all.filter(_.getLen < minFileBytes)
     if (small.size < 2)
-      return (g, CompactStats(0, all.size.toLong, 0L, 0L, 0L))
-    val headJson = entries.filter(_.action == "commit").maxBy(_.gen).schemaJson
+      return (snap.gen, CompactStats(0, all.size.toLong, 0L, 0L, 0L))
     // a rollback across a schema change leaves the current rows
     // physically under the OLD names (readGen reconciles on read); a
     // byte-copy pack of those files would mint a head commit whose
     // schema silently reverts the evolution — materialize first
-    require(schemaJson == headJson,
+    require(snap.schemaJson == snap.headJson,
       s"current generation's physical schema predates the table " +
         s"schema (rollback across a schema change); " +
         "commit(readCurrent(...)) to materialize before compacting")
-    val newGen = nextId(spark, root)
+    val fs = snap.fs
+    val newGen = snap.nextId
     val outDir = new Path(genDir(root, newGen))
     fs.delete(outDir, true)
     val smallBytes = small.map(_.getLen).sum
     val nOut = math.max(1L,
       (smallBytes + targetBytes - 1) / targetBytes).toInt
-    readParquet(spark, schemaJson, small.map(_.getPath.toString))
+    readParquet(spark, snap.schemaJson, small.map(_.getPath.toString))
       .coalesce(nOut)
       .write.mode("overwrite").parquet(outDir.toString)
     val packed = dataFiles(fs, outDir.toString)
@@ -1174,17 +1160,10 @@ object Maintenance {
     val atSize = all.filterNot(_.getLen < minFileBytes)
       .map(st => fs.makeQualified(st.getPath).toString).sorted
     // sidecar rides over: at-size rows carried, packed files harvested
-    statsFor(spark, root, g).foreach { stats =>
-      import spark.implicits._
-      val cols = stats.map(_.column).distinct
-      val carried = stats.filter(s => atSize.contains(s.file))
-      writeSidecar(spark, root, newGen,
-        TableStats.harvest(spark, packed, cols)
-          .unionByName(spark.createDataset(carried)))
-    }
+    snap.stats.foreach(carrySidecar(spark, root, newGen, _, atSize, packed))
     appendManifest(spark, root,
-      Row(newGen, "commit", newGen, nRows, null, schemaJson,
-        encodeFiles(atSize ++ packed)))
+      ManifestEntry(newGen, "commit", newGen, snap.nRows, null,
+        snap.schemaJson, encodeFiles(atSize ++ packed)))
     (newGen,
       CompactStats(1, all.size.toLong, small.size.toLong,
         packed.size.toLong, smallBytes))

@@ -16,7 +16,9 @@ import graft.operators.TableStats.ColStats
   *
   * This is the piece that turns the sidecar from a special-purpose
   * read path (`Maintenance.prunedReadCurrent`, one inclusive range,
-  * caller-driven) into TABLE BEHAVIOR: wrap the scan in a
+  * caller-driven; both paths take the files, the sidecar and the
+  * schema from one manifest snapshot and read no footer to plan) into
+  * TABLE BEHAVIOR: wrap the scan in a
   * `HadoopFsRelation` over this index and Spark's own
   * `FileSourceStrategy` hands every deterministic predicate the user
   * wrote — `=`, `<`, `BETWEEN`, `IN`, `startsWith`, through `AND`/

@@ -853,9 +853,13 @@ object StreamOps {
     * where the old per-batch parquet round-trips would have gone, but
     * written/read ONCE per frame instead of one write job + one
     * re-read per consult). Both maps are keyed by batchId, so a
-    * replayed micro-batch overwrites ITS OWN entries and probes only
-    * strictly-earlier segments — the same idempotence contract the
-    * previous batchId-named directories carried. The old label landing
+    * micro-batch replayed INSIDE ONE PROCESS overwrites its own entries
+    * and probes only strictly-earlier segments. The maps live in driver
+    * memory and the checkpoint records only source offsets, so a
+    * restart from the checkpoint is NOT supported: the new process
+    * would resume with empty maps and lose the earlier batches' labels
+    * and segments (each call drains under a fresh checkpoint, so no
+    * caller in this engine restarts one). The old label landing
     * was additionally a `coalesce(1)` parquet write per generation — a
     * 1-task write of a corpus-sized frame at production scale; the
     * truncated frame keeps the resolver's own partitioning. */

@@ -100,16 +100,16 @@ class MaintenanceSpec extends SparkSpec {
       .select("v").as[String].collect().toSeq == Seq("g5"))
   }
 
-  test("driver-written appends and Spark-written checkpoints are one " +
-      "physical schema: either reader sees the same log") {
+  test("appended and checkpointed log files are one physical schema: " +
+      "the driver reader and a Spark scan see the same log") {
     val root = tmp() + "/t"
     // driver-side appends (commit writes the log row via parquet-hadoop)
     Maintenance.commit(spark, root,
       Seq((1, "a")).toDF("k", "v"))
     Maintenance.commit(spark, root,
       Seq((1, "a"), (2, "b")).toDF("k", "v"))
-    // fold into ONE Spark-written file, then append more driver rows on
-    // top, so the log holds both writers' files side by side
+    // fold into ONE checkpoint file, then append more rows on top, so
+    // the log holds both kinds of file side by side
     Maintenance.checkpointManifest(spark, root)
     Maintenance.rollback(spark, root, toGen = 1)
     Maintenance.commit(spark, root,
@@ -595,10 +595,10 @@ class MaintenanceSpec extends SparkSpec {
 
   test("compactGen refuses a rollback that crossed a schema change") {
     val root = tmp() + "/t"
-    Maintenance.commit(spark, root,
-      Seq((1, "a"), (2, "b")).toDF("k", "v").repartition(2))
-    Maintenance.commit(spark, root,
-      Seq((1, "a")).toDF("k", "w"), renames = Map("w" -> "v"))
+    Maintenance.commitWithStats(spark, root,
+      Seq((1, "a"), (2, "b")).toDF("k", "v").repartition(2), Seq("k"))
+    Maintenance.commitWithStats(spark, root,
+      Seq((1, "a")).toDF("k", "w"), Seq("k"), renames = Map("w" -> "v"))
     Maintenance.rollback(spark, root, toGen = 1)
     // gen 1's physical files carry the pre-rename schema; a byte-copy
     // pack would mint a head commit that silently reverts the rename
@@ -607,6 +607,50 @@ class MaintenanceSpec extends SparkSpec {
         targetBytes = 64L << 20, minFileBytes = 4L << 20)
     }
     assert(e.getMessage.contains("materialize"))
+    // and a skipping scan would plan the old names under the new schema
+    val skip = intercept[IllegalArgumentException] {
+      Maintenance.readCurrentSkipping(spark, root)
+    }
+    assert(skip.getMessage.contains("materialize"))
+  }
+
+  test("snapshot reads plan without a job; merge and delete infer no " +
+      "schema") {
+    val root = tmp() + "/t"
+    val ev = Tables(spark, sf, "events")
+      .select("event_id", "event_type", "value")
+    Maintenance.commitWithStats(spark, root,
+      ev.repartitionByRange(8, col("event_id")),
+      statsColumns = Seq("event_id"))
+    def jobs[T](body: => T): (T, Int) = {
+      val (out, cap) = Capture.during(spark)(body)
+      (out, cap.jobs.size)
+    }
+    val (some, pruneJobs) = jobs(Maintenance.prunedReadCurrent(spark, root,
+      "event_id", 100L, 220L))
+    assert(some.filesRead > 0 && some.filesRead < 8, some)
+    val (none, emptyJobs) = jobs(Maintenance.prunedReadCurrent(spark, root,
+      "event_id", 1000000L, 2000000L))
+    assert(none.filesRead == 0, none)
+    val (_, skipJobs) = jobs(Maintenance.readCurrentSkipping(spark, root))
+    val st = Maintenance.stageCommit(spark, root, ev)
+    val (staged, stageJobs) = jobs(Maintenance.readStage(spark, root, st))
+    assert(staged.columns.toSeq == Seq("event_id", "event_type", "value"))
+    Maintenance.abortStage(spark, root, st)
+    assert((pruneJobs, emptyJobs, skipJobs, stageJobs) == (0, 0, 0, 0),
+      (pruneJobs, emptyJobs, skipJobs, stageJobs))
+    // merge and delete read the rewritten files under the manifest's
+    // schema: none of these jobs infers a schema
+    val upd = ev.filter(col("event_id").between(100, 220))
+      .withColumn("event_type", lit("updated"))
+    val (m, mergeJobs) = jobs(Maintenance.merge(spark, root, upd, "event_id"))
+    assert(m.filesRewritten > 0 && m.filesReferenced > 0, m)
+    val doomed = ev.filter(col("event_id").between(300, 360))
+      .select("event_id")
+    val (d, deleteJobs) = jobs(Maintenance.delete(spark, root, doomed,
+      "event_id"))
+    assert(d.filesRewritten > 0 && d.rowsDeleted == doomed.count(), d)
+    assert((mergeJobs, deleteJobs) == (10, 9), (mergeJobs, deleteJobs))
   }
 
   test("per-parent pools keep hive partition files under their path") {

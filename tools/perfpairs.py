@@ -18,9 +18,11 @@ table follows for each call's median wall (the run's `# call <name>: median`
 line), so a `call_p50_s` change names the call that moved. Every run's
 correct/failed counts are printed with its host canaries (single-thread,
 multi-thread and IO rates before and after the run), so a run taken in a
-slow host window shows up; the canaries' medians per side close the report.
-The last line of standard output is one JSON object with every run's
-metrics, call medians and canaries.
+slow host window shows up; the canaries' medians per side follow. The report
+closes with one line that names every run that was not correct or had a
+failed call (their numbers are still in the medians above), and the script
+then exits 1 if there was any. The last line of standard output is one JSON
+object with every run's metrics, call medians and canaries.
 
 To measure uncommitted work, stage new files and pass
 `--change "$(git stash create)"`: that names a commit of the working tree
@@ -152,10 +154,18 @@ def main():
                 row(f"canary {when} {k}",
                     [r["canary"][when][k] for r in runs["parent"]],
                     [r["canary"][when][k] for r in runs["change"]], 1)
+        bad = [f"{side} seed {r['seed']} (correct={r['correct']}, "
+               f"failed {r['failed']}/{r['attempted']})"
+               for side in ("parent", "change") for r in runs[side]
+               if not r["correct"] or r["failed"] > 0]
+        log(f"# bad runs: {', '.join(bad)}" if bad else
+            "# every run correct, 0 failed calls")
         print(json.dumps({"workload": a.workload, "parent": a.parent,
                           "change": a.change, "runs": runs}))
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    if bad:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
